@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.materialize import pinned
+from ..plans.materialize import memo, pinned
 from .text import content_hash, normalize_text, shingles, tokens
 
 
@@ -100,7 +100,7 @@ def minhash_band_pairs(
     bands: int = 8,
     max_bucket: int = 500,
     num_hashes: int | None = None,
-    banded_pool: str | None = None,
+    key: tuple | None = None,
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` rows of equal width,
     bucket-join on (band, hash-of-row). Returns candidate pairs (a < b).
@@ -113,13 +113,13 @@ def minhash_band_pairs(
     pipeline runs once just to read an array length), so the probe is
     only a back-compat path for callers that genuinely don't know.
 
-    ``banded_pool`` (r12): callers whose ``signatures`` are themselves a
-    pooled per-corpus table pass a corpus-keyed pool name and the BANDED
-    table (docs × bands rows of three scalars — the per-call xxhash64 +
-    128 long→string casts per doc were the dominant residual cost of the
-    char-gram query's warm runs) is pooled under it instead of re-pinned
-    per call; same index-state class and key discipline as the signature
-    pools. ``None`` keeps the per-call pin (input not corpus-stable)."""
+    ``key`` (r12): callers whose ``signatures`` are themselves a
+    memoized per-corpus table pass its memo key, and the BANDED table
+    (docs × bands rows of three scalars — the per-call xxhash64 + 128
+    long→string casts per doc were the dominant residual cost of the
+    char-gram query's warm runs) is memoized under it, extended by the
+    banding config, instead of re-pinned per call. ``None`` keeps the
+    per-call pin (input not corpus-stable)."""
     if num_hashes is None:
         first = signatures.select(F.size("signature").alias("n")).first()
         if first is None:  # empty corpus
@@ -135,22 +135,26 @@ def minhash_band_pairs(
         f"x -> CAST(x AS STRING)))))"
         for b in range(bands)
     )
-    banded = None
-    if banded_pool is not None:
-        from ..plans.materialize import pool_get
 
-        banded = pool_get(banded_pool, signatures.sparkSession)
-    if banded is None:
-        banded = signatures.selectExpr(
+    def band() -> DataFrame:
+        return signatures.selectExpr(
             f"`{id_col}` AS doc", f"explode(array({structs})) AS bb"
         ).select("doc", "bb.band", "bb.bucket")
-        # materialize once: the self-join below would otherwise recompute
-        # the full signature expression tree on both branches (2× the
-        # dominant cost); the banded table is (docs × bands) rows of three
-        # scalars. pinned (pooled persist), not localCheckpoint: repeated
-        # builds on a long-lived session must free the previous
-        # generation's blocks.
-        banded = pinned(banded, banded_pool or "minhash_banded")
+
+    # materialize once: the self-join below would otherwise recompute
+    # the full signature expression tree on both branches (2× the
+    # dominant cost); the banded table is (docs × bands) rows of three
+    # scalars. pinned (pooled persist), not localCheckpoint: repeated
+    # builds on a long-lived session must free the previous
+    # generation's blocks.
+    if key is None:
+        banded = pinned(band(), "minhash_banded")
+    else:
+        banded = memo(
+            signatures.sparkSession,
+            (*key, "minhash_banded", id_col, bands, num_hashes),
+            band,
+        )
     # bucket-size cap via a window count over the SAME (band, bucket)
     # partitioning the self-join below shuffles on anyway — one exchange
     # and one plan fewer than the previous groupBy-sizes + join-back form

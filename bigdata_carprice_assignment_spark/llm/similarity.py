@@ -9,6 +9,7 @@ nearest partitions only).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
 import pandas as pd
@@ -261,14 +262,9 @@ def srp_signatures(
     return df.select(F.col(id_col), sig(F.col(vec_col)).alias("srp_sig"))
 
 
+@functools.cache
 def _srp_matrix_cached(n_bits: int, dim: int):
-    key = (n_bits, dim)
-    if key not in _SRP_CACHE:
-        _SRP_CACHE[key] = _srp_rademacher(n_bits, dim)
-    return _SRP_CACHE[key]
-
-
-_SRP_CACHE: dict = {}
+    return _srp_rademacher(n_bits, dim)
 
 
 def srp_band_pairs(
@@ -545,7 +541,7 @@ def srp_knn_join(
     screen_cos: float = 0.85,
     n_docs_stat: int | None = None,
     n_distinct_stat: int | None = None,
-    sigs_pool: str | None = None,
+    key: tuple | None = None,
 ) -> DataFrame:
     """Approximate kNN-join via SRP banding: candidates from the band
     join, exact double-precision cosine rerank, per-vector top-k window.
@@ -570,12 +566,13 @@ def srp_knn_join(
     1860 bits). The fixed 60-bit/10-bit setting remains for the
     mechanism-exact oracle gate.
 
-    ``sigs_pool`` caches the wide signature table per (pool, width) on
-    the ADAPTIVE wide-signature ungrouped branch ONLY — the dedup
-    branch (n_uniq <= 0.7*n_docs) builds group-grain signatures keyed
-    by a derived _gid (not corpus-stable ids), and the explicit
-    ``band_bits`` path uses the 60-bit table, so neither consults the
-    pool; callers on those routes get no caching (ADVICE r11).
+    ``key`` (the caller's memo key for ``df``) memoizes the wide
+    signature table per (key, width) on the ADAPTIVE wide-signature
+    ungrouped branch ONLY — the dedup branch (n_uniq <= 0.7*n_docs)
+    builds group-grain signatures keyed by a derived _gid (not
+    corpus-stable ids), and the explicit ``band_bits`` path uses the
+    60-bit table, so neither consults the memo; callers on those routes
+    get no caching (ADVICE r11).
 
     ``n_docs_stat`` / ``n_distinct_stat`` are CATALOG STATISTICS (r10):
     the adaptive path needs the corpus size (to pick band bits) and the
@@ -680,26 +677,27 @@ def srp_knn_join(
         else:
             n_uniq = None
         if n_uniq is None or n_uniq > 0.7 * n_docs:
-            # ``sigs_pool`` (r11b): the wide signature table is
-            # corpus-keyed index state (n rows x n_words longs — the
-            # same artifact class as the pooled 60-bit table the
-            # mechanism gate shares); callers whose input is an
-            # immutable corpus pass a pool name and warm calls skip
-            # the per-call projection matmul. Keyed by width so the
-            # tight and cheap contracts (different band counts =>
-            # different word counts) each cache their own table.
-            if sigs_pool is not None:
-                from ..plans.materialize import pinned, pool_get
+            # ``key`` (r11b): the wide signature table is corpus-keyed
+            # index state (n rows x n_words longs — the same artifact
+            # class as the memoized 60-bit table the mechanism gate
+            # shares); callers whose input is an immutable corpus pass
+            # its memo key and warm calls skip the per-call projection
+            # matmul. Keyed by width so the tight and cheap contracts
+            # (different band counts => different word counts) each
+            # cache their own table.
+            def sign() -> DataFrame:
+                return srp_signatures_wide(df, vec_col, id_col, wide_bits)
 
-                key = f"{sigs_pool}:w{wide_bits}"
-                sigs = pool_get(key, df.sparkSession)
-                if sigs is None:
-                    sigs = pinned(
-                        srp_signatures_wide(df, vec_col, id_col, wide_bits),
-                        key,
-                    )
+            if key is None:
+                sigs = sign()
             else:
-                sigs = srp_signatures_wide(df, vec_col, id_col, wide_bits)
+                from ..plans.materialize import memo
+
+                sigs = memo(
+                    df.sparkSession,
+                    (*key, "srp_signatures_wide", vec_col, id_col, wide_bits),
+                    sign,
+                )
             pairs = srp_band_pairs_wide(
                 sigs, id_col, wide_bits, band_bits, max_bucket, max_hamming=thr
             )
@@ -923,13 +921,9 @@ def ivf_index(
     # Pooled persist, not localCheckpoint: repeated index builds on a
     # long-lived session must release the previous build's blocks
     # (round-2 bench showed warm ANN runs slower than cold from exactly
-    # this accumulation). SKIP the pin when the caller already persisted
-    # the input (e.g. a shared feature pool): persist() would alias the
-    # SAME storage under this pool's name, and the next index build's
-    # eviction would silently unpersist the caller's cache out from
-    # under every other query sharing it.
-    if not (df.storageLevel.useMemory or df.storageLevel.useDisk):
-        df = pinned(df, "ivf_index")
+    # this accumulation). An input the caller already persisted (e.g. a
+    # memoized feature table) is used as is: ``pinned`` skips it.
+    df = pinned(df, "ivf_index")
     if n_cells is None:
         n_cells = int(min(4096, max(8, 4 * math.sqrt(df.count()))))
     if id_col is not None:

@@ -10,19 +10,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.materialize import pinned
-
-# pagerank's node count per pool name — a scalar of the pooled degree
-# frame (same in-session lifecycle as the pool itself; invalidated on
-# rebuild). Saves one count job per pool_reuse call.
-_PR_N: dict[str, int] = {}
+from ..plans.materialize import memo, pinned
 
 
-def symmetric_adjacency(
-    e: DataFrame, pool: str | None = None
-) -> DataFrame:
+def symmetric_adjacency(e: DataFrame, key: tuple | None = None) -> DataFrame:
     """Symmetric adjacency (node, other) of an undirected (u, v) edge
-    list, HASH-PARTITIONED on ``node`` and optionally pooled (r11b).
+    list, HASH-PARTITIONED on ``node`` and optionally memoized (r11b).
 
     The per-round Pregel operators (k-core, BFS) probe this frame every
     round through broadcast semi-joins and then aggregate by ``node`` —
@@ -33,34 +26,23 @@ def symmetric_adjacency(
     key is scanned from cache and satisfies the groupBy's required
     distribution outright (guide §2.4 — operations keyed the same way
     share one exchange; broadcast semi-joins preserve the layout).
-    ``pool=None`` keeps the old inline shape for one-shot callers.
-
-    POOL-KEY CONTRACT: ``pool`` must uniquely key the EDGE SOURCE — a
-    pooled generation is served verbatim with no check that it was
-    built from an equivalent edge frame, so two callers passing
-    different edge lists under one pool name would silently compute
-    over the wrong graph. Current call sites key by sf_dir (the
-    per-corpus co-purchase graph); any new caller must do the same
-    (ADVICE r11)."""
-    from ..plans.materialize import pinned, pool_get
-
-    spark = e.sparkSession
-    if pool is not None:
-        cached = pool_get(pool, spark)
-        if cached is not None:
-            return cached
+    ``key`` (the caller's memo key for the edge source, see
+    ``plans.materialize.memo``) memoizes the frame per session;
+    ``key=None`` keeps the inline shape for one-shot callers."""
     sym = e.select(F.col("u").alias("node"), F.col("v").alias("other")).unionAll(
         e.select(F.col("v").alias("node"), F.col("u").alias("other"))
     )
-    if pool is None:
+    if key is None:
         return sym
-    sym = sym.repartition(spark.sparkContext.defaultParallelism, "node")
-    return pinned(sym, pool)
+    spark = e.sparkSession
+    return memo(
+        spark,
+        (*key, "symmetric_adjacency"),
+        lambda: sym.repartition(spark.sparkContext.defaultParallelism, "node"),
+    )
 
 
-def triangle_census(
-    e: DataFrame, pool: str = "tri_edges", pre_pinned: bool = False
-) -> DataFrame:
+def triangle_census(e: DataFrame, pool: str = "tri_edges") -> DataFrame:
     """Exact triangle census of an undirected simple graph.
 
     ``e`` must hold one row per undirected edge as (u, v) with u < v,
@@ -79,12 +61,10 @@ def triangle_census(
     so the degree joins are left to AQE (which broadcasts them only when
     the measured size is actually under the threshold).
 
-    ``pre_pinned``: the caller already persisted ``e`` (e.g. the pooled
-    per-corpus co-purchase edge list shared by the whole graph family,
-    r11) — skip the internal pin so the shared generation isn't
-    re-registered (and later unpersisted) under this operator's pool."""
-    if not pre_pinned:
-        e = pinned(e, pool)
+    An ``e`` the caller already persisted (the memoized per-corpus
+    co-purchase edge list shared by the whole graph family, r11) is
+    used as is: ``pinned`` skips persisted frames."""
+    e = pinned(e, pool)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -137,8 +117,7 @@ def pagerank(
     e: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    pool: str = "pagerank",
-    pool_reuse: bool = False,
+    key: tuple | None = None,
 ) -> DataFrame:
     """PageRank by synchronous power iteration over an undirected simple
     graph ((u, v) rows, u < v; treated as one directed edge each way, so
@@ -181,8 +160,6 @@ def pagerank(
       eager/AQE-on 7.4-62 s (unstable under contention), lazy/AQE-off
       6.2-7.3 s stable.
     """
-    from ..plans.materialize import pinned, pool_get
-
     spark = e.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
     # Pin the degree-annotated edge list HASH-PARTITIONED ON src: every
@@ -193,28 +170,26 @@ def pagerank(
     # neutral; at cluster scale (ranks too big to broadcast) it removes
     # 10 full edge shuffles. One extra exchange at build time, amortized
     # over the fixed iteration count.
-    # ``pool_reuse`` (r11): callers whose edge list is itself pooled and
-    # immutable (the per-corpus co-purchase graph) pass a corpus-keyed
-    # pool name and reuse the built generation — rebuilding the
-    # degree-annotated table every call was ~4 jobs of pure recompute.
-    # r12: the node-grain degree table and its count ride the same pool
-    # (the count job and the degree groupBy re-ran per warm call).
-    edeg = pool_get(pool + "_edeg", spark) if pool_reuse else None
-    degp = pool_get(pool + "_deg", spark) if pool_reuse else None
-    if edeg is None or degp is None:
+    # ``key`` (r11): callers whose edge list is itself memoized and
+    # immutable (the per-corpus co-purchase graph) pass its memo key and
+    # reuse the built tables — rebuilding the degree-annotated table
+    # every call was ~4 jobs of pure recompute. r12: the node-grain
+    # degree table and its count ride the same entry (the count job and
+    # the degree groupBy re-ran per warm call).
+    tag = ("pagerank",) if key is None else (*key, "pagerank")
+
+    def build() -> tuple[DataFrame, DataFrame, int]:
         edges = e.select(
             F.col("u").alias("src"), F.col("v").alias("dst")
         ).unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        degp = pinned(deg, pool + "_deg")
+        degp = pinned(deg, (*tag, "deg"))
         edeg = pinned(
-            edges.join(degp, "src").repartition(n_parts, "src"), pool + "_edeg"
+            edges.join(degp, "src").repartition(n_parts, "src"), (*tag, "edeg")
         )
-        _PR_N.pop(pool, None)
-    n = _PR_N.get(pool) if pool_reuse else None
-    if n is None:
-        n = degp.count()
-        _PR_N[pool] = n
+        return degp, edeg, degp.count()
+
+    degp, edeg, n = build() if key is None else memo(spark, tag, build)
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -242,9 +217,7 @@ def kcore_peel_trace(
     e: DataFrame,
     k: int,
     rounds: int,
-    pool: str = "kcore",
-    pre_pinned: bool = False,
-    sym_pool: str | None = None,
+    key: tuple | None = None,
 ) -> list[tuple[int, int, int]]:
     """Synchronous k-core peeling over an undirected simple graph
     ((u, v) rows, u < v): each round removes every node whose degree
@@ -293,19 +266,20 @@ def kcore_peel_trace(
     per-round runtime re-optimization is pure driver latency. Probe at
     sf0.1 (6 rounds): 2.9 s eager/AQE-on → 1.7 s lazy/AQE-off, traces
     bit-identical.
-    """
-    from ..plans.materialize import pinned
 
+    ``key`` memoizes the symmetric adjacency (``symmetric_adjacency``).
+    """
     if k < 1:
         raise ValueError("kcore_peel_trace requires k >= 1")
-    edges = e.select("u", "v")
-    if not pre_pinned:
-        edges = pinned(edges, pool + "_edges")
+    # pin ``e`` itself, not its projection: a projection of a persisted
+    # frame is not persisted, so checking it would re-pin the caller's
+    # memoized edge list and add a count job
+    edges = pinned(e, "kcore_edges").select("u", "v")
     spark = e.sparkSession
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        sym = symmetric_adjacency(edges, sym_pool)
+        sym = symmetric_adjacency(edges, key)
         alive = sym.select("node").distinct().localCheckpoint()
 
         def alive_degrees(alive_df: DataFrame) -> DataFrame:
@@ -348,7 +322,7 @@ def kcore_peel_trace(
 
 
 def bfs_hop_counts(
-    e: DataFrame, seeds: DataFrame, hops: int, sym_pool: str | None = None
+    e: DataFrame, seeds: DataFrame, hops: int, key: tuple | None = None
 ) -> list[tuple[int, int]]:
     """Multi-source BFS over an undirected simple graph ((u, v) rows,
     u < v) from a ``seeds`` frame of (node) rows: returns the per-hop
@@ -369,13 +343,15 @@ def bfs_hop_counts(
     the visited union materializes inside the next hop's anti-join) and
     AQE is disabled around the fixed-shape loop (restored after) — the
     same per-round driver-latency fix as ``kcore_peel_trace``.
+
+    ``key`` memoizes the symmetric adjacency (``symmetric_adjacency``).
     """
     edges = e.select("u", "v")
     spark = e.sparkSession
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        sym = symmetric_adjacency(edges, sym_pool)
+        sym = symmetric_adjacency(edges, key)
         frontier = seeds.select("node").distinct().localCheckpoint()
         visited = frontier
         trace = [(0, frontier.count())]

@@ -36,17 +36,15 @@ def _cleaned(spark: SparkSession) -> DataFrame:
     # a very wide CASE-WHEN tree whose analysis alone costs ~seconds —
     # every carprice query paid that per call (2.5s warm for a 205-row
     # aggregate, pure plan overhead; guide §1.2). The checkpointed frame
-    # is 205 rows; pool_get hands the same truncated-lineage frame to
-    # every consumer in the session.
-    from ..plans.materialize import pinned, pool_get
+    # is 205 rows; memo hands the same truncated-lineage frame to every
+    # consumer in the session.
+    from ..plans.materialize import memo
 
-    pool = "carprice_cleaned_205"
-    cached = pool_get(pool, spark)
-    if cached is None:
-        cached = pinned(
-            cp.clean(cp.load_raw(spark)).localCheckpoint(), pool, eager=False
-        )
-    return cached
+    return memo(
+        spark,
+        ("carprice_cleaned", cp.REFERENCE_CSV),
+        lambda: cp.clean(cp.load_raw(spark)).localCheckpoint(),
+    )
 
 
 # DuckDB oracle for the full cleaned table: replays the reference pipeline

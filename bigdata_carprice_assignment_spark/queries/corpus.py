@@ -282,35 +282,32 @@ def boilerplate_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     two shuffles on the gram key, one on source. The gram explode is
     ~L× row growth, the reason this stays a single projected (doc_id,
     source, gram) triple and never carries text."""
-    from ..plans.materialize import pinned, pool_get
+    from ..plans.materialize import memo
 
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    # materialize once, POOLED per (session, corpus) — r11b: three
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        toks = F.split(F.col("text"), " ")
+        n_parts = max(spark.sparkContext.defaultParallelism, 8)
+        return docs.repartition(n_parts, "doc_id").select(
+            "doc_id",
+            "source",
+            F.explode(
+                F.when(
+                    F.size(toks) >= 6,
+                    F.transform(
+                        F.sequence(F.lit(1), F.size(toks) - F.lit(5)),
+                        lambda i: F.array_join(F.slice(toks, i, 6), " "),
+                    ),
+                ).otherwise(F.array().cast("array<string>"))
+            ).alias("g"),
+        )
+
+    # materialize once, memoized per (session, corpus) — r11b: three
     # consumers (distinct-doc counts, totals, boilerplate hits) share
     # the exploded gram table within one call, and the table is
     # corpus-keyed immutable index state, so warm runs reuse it instead
-    # of re-running the explode (the old pin had no pool_get guard)
-    pool = f"boilerplate_grams:{sf_dir}"
-    grams = pool_get(pool, spark)
-    if grams is None:
-        grams = pinned(
-            docs.repartition(n_parts, "doc_id").select(
-                "doc_id",
-                "source",
-                F.explode(
-                    F.when(
-                        F.size(toks) >= 6,
-                        F.transform(
-                            F.sequence(F.lit(1), F.size(toks) - F.lit(5)),
-                            lambda i: F.array_join(F.slice(toks, i, 6), " "),
-                        ),
-                    ).otherwise(F.array().cast("array<string>"))
-                ).alias("g"),
-            ),
-            pool,
-        )
+    # of re-running the explode
+    grams = memo(spark, ("boilerplate_grams", sf_dir, 6), build)
     boiler = (
         grams.select("g", "doc_id")
         .distinct()
@@ -1007,20 +1004,18 @@ def bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus again."""
     from .llmdata import _doc_norm_tokens
 
-    from ..plans.materialize import pinned, pool_get
+    from ..plans.materialize import memo
 
-    # Pooled initial vocabulary (r11): the corpus-sized explode +
+    # Memoized initial vocabulary (r11): the corpus-sized explode +
     # groupBy is the only fact-scale pass in BPE training and is
     # identical every call — the merge rounds never touch the corpus
-    # again, so the round loop starts from the pooled frame.
-    pool = f"bpe_vocab:{sf_dir}"
-    vocab = pool_get(pool, spark)
-    if vocab is None:
+    # again, so the round loop starts from the memoized frame.
+    def build() -> DataFrame:
         docs = _doc_norm_tokens(spark, sf_dir)
         toks = docs.select(F.explode("toks").alias("w")).filter(
             F.col("w").rlike(r"^[a-z]+$")
         )
-        vocab = pinned(
+        return (
             toks.groupBy(F.col("w").alias("word"))
             .agg(F.count(F.lit(1)).alias("n"))
             .select(
@@ -1030,9 +1025,10 @@ def bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.regexp_replace(F.col("word"), r"(.)", r"[$1]"),
                     F.lit("[</w>]"),
                 ).alias("seq"),
-            ),
-            pool,
+            )
         )
+
+    vocab = memo(spark, ("bpe_vocab", sf_dir), build)
     out: list[tuple[int, str, str, str, int]] = []
     for k in range(1, _BPE_ROUNDS + 1):
         syms = F.regexp_extract_all(F.col("seq"), F.lit(r"\[([^\]]+)\]"), 1)

@@ -1252,7 +1252,10 @@ def incremental_daily_refresh_accounting(
     — unchanged days are carried forward — and the audited invariant is
     that the incrementally-maintained table EQUALS the full recompute
     (EXCEPT-count pinned to 0 in the hashed row), with the recompute
-    fraction exposed.
+    fraction exposed. Since r12 both sides re-sum the same pinned
+    (day, late) partials, so the audit checks only the carry-forward /
+    refresh routing (which days are kept, which are recomputed), not
+    the aggregation itself; the oracle checks the totals.
 
     Scale: this is how a 100 TB daily rollup absorbs late data — the
     refresh reads only the affected partitions (here an IN-filter that

@@ -26,27 +26,26 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL frame, and before r11 each rebuilt it from the fact table
     (scan + distinct + self-join + distinct = 3 shuffles, ~1-2s each at
     sf0.1; guide §2.4 — remove repeated shuffles outright). Pooled
-    persist (plans/materialize.pinned): lineage stays recomputable, one
-    generation per corpus, freed on the next build."""
-    from ..plans.materialize import pinned, pool_get
+    persist (plans/materialize.memo): lineage stays recomputable, one
+    generation per corpus. Graph operators given the same key memoize
+    their derived tables under it."""
+    from ..plans.materialize import memo
 
-    pool = f"copurchase_edges:{sf_dir}"
-    cached = pool_get(pool, spark)
-    if cached is not None:
-        return cached
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 30)
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    e = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .distinct()
-    )
-    return pinned(e, pool)
+    def build() -> DataFrame:
+        li = (
+            load_table(spark, sf_dir, "lineitem")
+            .filter(F.col("l_quantity") >= 30)
+            .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
+            .distinct()
+        )
+        a, b = li.alias("a"), li.alias("b")
+        return (
+            a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
+            .select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
+            .distinct()
+        )
+
+    return memo(spark, ("copurchase_edges", sf_dir), build)
 
 
 @query(
@@ -990,11 +989,7 @@ def copurchase_pagerank_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphs import pagerank
 
     ranks = pagerank(
-        e,
-        iterations=10,
-        damping=0.85,
-        pool=f"pagerank:{sf_dir}",
-        pool_reuse=True,
+        e, iterations=10, damping=0.85, key=("copurchase_edges", sf_dir)
     )
     return (
         ranks.select(
@@ -1071,7 +1066,7 @@ def copurchase_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _copurchase_edges(spark, sf_dir)
     from ..operators.graphs import triangle_census
 
-    return triangle_census(e, pre_pinned=True)
+    return triangle_census(e)
 
 
 @query(
@@ -3661,11 +3656,7 @@ def copurchase_kcore_peel_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphs import kcore_peel_trace
 
     trace = kcore_peel_trace(
-        e,
-        k=_KCORE_K,
-        rounds=_KCORE_ROUNDS,
-        pre_pinned=True,
-        sym_pool=f"copurchase_sym:{sf_dir}",
+        e, k=_KCORE_K, rounds=_KCORE_ROUNDS, key=("copurchase_edges", sf_dir)
     )
     return spark.createDataFrame(
         trace, "round long, n_nodes long, n_edges long"
@@ -3734,7 +3725,7 @@ def copurchase_bfs_hop_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphs import bfs_hop_counts
 
     trace = bfs_hop_counts(
-        e, seeds, hops=_BFS_HOPS, sym_pool=f"copurchase_sym:{sf_dir}"
+        e, seeds, hops=_BFS_HOPS, key=("copurchase_edges", sf_dir)
     )
     return spark.createDataFrame(trace, "hop long, n_new long").orderBy("hop")
 

@@ -18,11 +18,9 @@ def get_spark(app_name: str = "bigdata_carprice_assignment_spark") -> SparkSessi
     """Build (or reuse) a SparkSession.
 
     Env knobs (driver harness contract):
-      SPARK_GRAFT_CPUS — local parallelism (default 32)
-      SPARK_GRAFT_SHUFFLE_PARTITIONS — shuffle width (default = cpus)
+      SPARK_GRAFT_CPUS — local parallelism and shuffle width (default 32)
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -31,7 +29,7 @@ def get_spark(app_name: str = "bigdata_carprice_assignment_spark") -> SparkSessi
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", str(cpus))
         # UTC pinned so timestamp semantics match the DuckDB oracle
         # (duckdb TIMESTAMP is tz-naive).
         .config("spark.sql.session.timeZone", "UTC")

@@ -60,9 +60,9 @@ def test_ivf_knn_join_chunked_equals_brute_force(spark):
 
 
 def test_srp_knn_join_sigs_pool_identical(spark):
-    """srp_knn_join with a signature pool returns row-identical output
-    to the unpooled call (the pool only caches the projection matmul),
-    including on a REPEATED pooled call (cache-hit path)."""
+    """srp_knn_join with a memo key returns row-identical output to the
+    unkeyed call (the memo only caches the projection matmul),
+    including on a REPEATED keyed call (cache-hit path)."""
     n, dim = 60, 32
     X = _int_vectors(n, dim, seed=11)
     df = spark.createDataFrame(
@@ -75,7 +75,7 @@ def test_srp_knn_join_sigs_pool_identical(spark):
         map(
             tuple,
             S.srp_knn_join(
-                df, "vec", "vid", sigs_pool="test_srp_pool", **kw
+                df, "vec", "vid", key=("test_srp_pool",), **kw
             ).collect(),
         )
     )
@@ -83,7 +83,7 @@ def test_srp_knn_join_sigs_pool_identical(spark):
         map(
             tuple,
             S.srp_knn_join(
-                df, "vec", "vid", sigs_pool="test_srp_pool", **kw
+                df, "vec", "vid", key=("test_srp_pool",), **kw
             ).collect(),
         )
     )

@@ -147,8 +147,8 @@ def test_pagerank_lazy_checkpoint_loop_stable(spark):
     edges = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (2, 5), (5, 6)]
     e = spark.createDataFrame(edges, "u long, v long")
     before = spark.conf.get("spark.sql.adaptive.enabled")
-    r1 = sorted(map(tuple, pagerank(e, iterations=5, pool="t12pr").collect()))
-    r2 = sorted(map(tuple, pagerank(e, iterations=5, pool="t12pr").collect()))
+    r1 = sorted(map(tuple, pagerank(e, iterations=5, key=("t12pr",)).collect()))
+    r2 = sorted(map(tuple, pagerank(e, iterations=5, key=("t12pr",)).collect()))
     assert r1 == r2
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
     # sanity: ranks sum to ~1

@@ -78,21 +78,65 @@ def test_connected_components_local_matches_distributed(spark):
 
 
 def test_pool_get_reuses_within_session(spark):
-    """pool_get must hand back the same pinned generation within one
-    session (build-once semantics) and miss for unknown pools; pinned
-    replaces the generation under the same name."""
+    """pool_get must hand back the same entry within one session
+    (build-once semantics) for string and tuple keys, and miss for
+    unknown keys and for another session; pinned replaces the
+    generation under the same name; memo stores a non-DataFrame value
+    as is; release_all drops pinned frames and stored values alike."""
     from bigdata_carprice_assignment_spark.plans import materialize as M
 
-    df1 = spark.range(10)
-    assert M.pool_get("unit_pool_x", spark) is None
-    pinned1 = M.pinned(df1, "unit_pool_x")
-    assert M.pool_get("unit_pool_x", spark) is pinned1
-    # new generation evicts the old one but stays retrievable
-    pinned2 = M.pinned(spark.range(5), "unit_pool_x")
-    assert M.pool_get("unit_pool_x", spark) is pinned2
-    assert pinned2.count() == 5
+    other = spark.newSession()
+    keys = ["unit_pool_x", ("unit_pool", "x", 1)]
+    for i, key in enumerate(keys):
+        assert M.pool_get(key, spark) is None
+        pinned1 = M.pinned(spark.range(1010 + i), key)
+        assert M.pool_get(key, spark) is pinned1
+        assert M.pool_get(key, other) is None
+        # new generation evicts the old one but stays retrievable
+        pinned2 = M.pinned(spark.range(505 + i), key)
+        assert M.pool_get(key, spark) is pinned2
+        assert pinned2.count() == 505 + i
+    stats = {"n_docs": 3}
+    keys.append(("unit_stats", "x"))
+    assert M.memo(spark, keys[-1], lambda: stats) is stats
+    assert M.memo(spark, keys[-1], lambda: {"n_docs": 4}) is stats
+    assert M.pool_get(keys[-1], other) is None
     M.release_all()
-    assert M.pool_get("unit_pool_x", spark) is None
+    for key in keys:
+        assert M.pool_get(key, spark) is None
+
+
+def test_pinned_leaves_already_persisted_frame_to_its_pool(spark):
+    """Pinning a frame another pool already persisted, under a second
+    name, must not alias its storage: evicting the second name leaves
+    the first pool's blocks cached."""
+    from bigdata_carprice_assignment_spark.plans import materialize as M
+
+    first = M.pinned(spark.range(1021), "unit_alias_a")
+    M.pinned(first, "unit_alias_b")
+    M.pinned(spark.range(1022), "unit_alias_b")  # evicts "unit_alias_b"
+    level = first.storageLevel
+    assert level.useMemory or level.useDisk
+
+
+def test_minhash_band_pairs_memo_key_carries_banding(spark):
+    """Two calls with the same caller key and different ``bands`` must
+    each return the candidates of their own banding."""
+    from bigdata_carprice_assignment_spark.llm.dedup import minhash_band_pairs
+
+    sigs = spark.createDataFrame(
+        [(1, [1, 2, 3, 4]), (2, [1, 2, 9, 9]), (3, [7, 7, 3, 4])],
+        "doc_id long, signature array<long>",
+    )
+
+    def pairs(bands: int) -> list[tuple]:
+        out = minhash_band_pairs(
+            sigs, "doc_id", bands=bands, num_hashes=4, key=("unit_band_sigs",)
+        )
+        return sorted(map(tuple, out.collect()))
+
+    assert pairs(1) == []  # one 4-wide band: no two signatures agree
+    assert pairs(2) == [(1, 2), (1, 3)]
 
 
 def test_burst_dedup_gap_boundary(spark, tmp_path):
