@@ -240,113 +240,19 @@ def srp_signatures(
     the BLAS matmul here and DuckDB's sequential list_sum produce the
     SAME sign no matter how either engine associates the additions —
     the property that makes an approximate index's candidate mechanism
-    hash-checkable, not just recall-spot-checked. n_bits=60 keeps the
-    packed signature in positive BIGINT range (same discipline as the
-    md5-portable SimHash variant) so ``>>`` banding needs no unsigned
-    shift on either engine.
+    hash-checkable, not just recall-spot-checked.
+
+    The signature is an ``array<long>`` of 60-bit words: word w carries
+    the global bits [60w, 60w+60), so every word stays in positive
+    BIGINT range and ``>>`` banding needs no unsigned shift on either
+    engine (a 60-bit signature is one word, the oracle's single BIGINT).
+    Signatures wider than one word let band_bits scale with log2(n), so
+    expected random collisions stay ~O(n) per band; a fixed 2^10 bucket
+    count saturates, and candidate pairs then grow O(n²/2^band_bits)
+    (measured 75x time at 10x data on the clone corpus).
 
     Scale: one Arrow-batched pandas_udf projection (X @ Sᵀ per batch),
-    no shuffle; the signature table is n rows of one long."""
-    import numpy as np
-
-    @F.pandas_udf("long")
-    def sig(vs: pd.Series) -> pd.Series:
-        X = np.asarray(vs.tolist(), dtype=np.float64)
-        S = _srp_matrix_cached(n_bits, X.shape[1])
-        bits = (X @ S.T) >= 0.0
-        out = np.zeros(len(X), dtype=np.int64)
-        for b in range(n_bits):
-            out |= bits[:, b].astype(np.int64) << b
-        return pd.Series(out)
-
-    return df.select(F.col(id_col), sig(F.col(vec_col)).alias("srp_sig"))
-
-
-@functools.cache
-def _srp_matrix_cached(n_bits: int, dim: int):
-    return _srp_rademacher(n_bits, dim)
-
-
-def srp_band_pairs(
-    sigs: DataFrame,
-    id_col: str,
-    n_bits: int = 60,
-    band_bits: int = 10,
-    max_bucket: int | None = 2000,
-) -> DataFrame:
-    """SRP banding: split the n_bits signature into n_bits/band_bits
-    chunks; vectors sharing any chunk are candidates — the cosine-LSH
-    candidate join that ACTUALLY PRUNES on angular data (unlike
-    euclidean BRP buckets on unit-norm vectors, where the projection
-    spread collapses below any usable bucket width —
-    ``blocked_cosine_pairs`` documents that failure). Random pairs
-    collide per band w.p. ~2^-band_bits; near-angular pairs (θ→0)
-    collide w.p. →1. Returns distinct (a < b, hamming); buckets larger
-    than ``max_bucket`` are dropped (capped, logged shape — same
-    boilerplate guard as MinHash banding). ``max_bucket=None`` skips
-    the cap AND its window count entirely — an exactness gate that
-    must emit every pair pays no cap bookkeeping for a cap that can
-    never fire (r10: the window over (band, key) was a full extra
-    exchange of the banded rows, ~30% of the 60/10 gate's cold time).
-
-    ALL bands land in ONE banding exchange: the explode enumerates
-    every band of every signature, the bucket cap is a window count
-    over (band, key) riding that same exchange, and the self-join
-    reuses the window's (band, key) partitioning — one exchange total
-    before the dedup, no per-table jobs, no materialization barrier.
-    (The r8 shape pinned the banded table and rejoined a groupBy size
-    filter: one extra eager job + persist churn per call, and an extra
-    exchange — scheduler latency that made the adaptive gates
-    contention-fragile and warm>cold in BENCH_r08.)"""
-    from pyspark.sql import Window
-
-    n_bands = n_bits // band_bits
-    mask = (1 << band_bits) - 1
-    banded = sigs.select(
-        F.col(id_col).alias("doc"),
-        F.col("srp_sig").alias("sh"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("srp_sig", b * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "sh", "bb.band", "bb.key")
-    if max_bucket is not None:
-        cap = Window.partitionBy("band", "key")
-        banded = banded.withColumn("_sz", F.count(F.lit(1)).over(cap)).filter(
-            F.col("_sz") <= max_bucket
-        )
-    a = banded.select("band", "key", F.col("doc").alias("a"), F.col("sh").alias("sh_a"))
-    b = banded.select("band", "key", F.col("doc").alias("b"), F.col("sh").alias("sh_b"))
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .select("a", "b", "hamming")
-        .distinct()
-    )
-
-
-def srp_signatures_wide(
-    df: DataFrame, vec_col: str, id_col: str, n_bits: int
-) -> DataFrame:
-    """Multi-word SRP signatures (``array<long>`` of 60-bit words, same
-    md5-derived hyperplanes with GLOBAL bit indices — word w carries
-    bits [60w, 60w+60)). The single-long :func:`srp_signatures` caps at
-    60 bits, which caps banding at 2^10 buckets for 6 bands — and a
-    FIXED bucket count saturates: candidate pairs grow O(n²/2^band_bits)
-    once n ≫ 2^band_bits (measured 75x time at 10x data on the clone
-    corpus, SCALE.md round-5 probe). Longer signatures let band_bits
-    scale with log2(n) so expected random collisions stay ~O(n) per
-    band."""
+    no shuffle; the signature table is n rows of n_bits/60 longs."""
     import numpy as np
 
     n_words = (n_bits + 59) // 60
@@ -364,49 +270,60 @@ def srp_signatures_wide(
     return df.select(F.col(id_col), sig(F.col(vec_col)).alias("srp_sig"))
 
 
-def srp_band_pairs_wide(
+@functools.cache
+def _srp_matrix_cached(n_bits: int, dim: int):
+    return _srp_rademacher(n_bits, dim)
+
+
+def srp_band_pairs(
     sigs: DataFrame,
     id_col: str,
-    n_bits: int,
-    band_bits: int,
+    n_bits: int = 60,
+    band_bits: int = 10,
     max_bucket: int | None = 2000,
     max_hamming: int | None = None,
     weight_col: str | None = None,
     include_self: bool = False,
 ) -> DataFrame:
-    """Banding over multi-word signatures: each 60-bit word is split
-    into ``60 // band_bits`` chunks independently (bands never span a
-    word boundary — layout simplicity; the hyperplanes are i.i.d., so
-    which bits form a band is immaterial). Hamming distance folds
-    bit_count(xor) across the word arrays natively.
+    """SRP banding: split each 60-bit signature word into
+    ``60 // band_bits`` chunks; vectors sharing any chunk are candidates
+    — the cosine-LSH candidate join that ACTUALLY PRUNES on angular data
+    (unlike euclidean BRP buckets on unit-norm vectors, where the
+    projection spread collapses below any usable bucket width —
+    ``blocked_cosine_pairs`` documents that failure). Random pairs
+    collide per band w.p. ~2^-band_bits; near-angular pairs (θ→0)
+    collide w.p. →1. Bands never span a word boundary or reach past
+    bit n_bits; the hyperplanes are i.i.d., so which bits form a band is
+    immaterial. Returns
+    distinct (a < b, hamming).
 
-    Hamming is computed (and the signature arrays DROPPED) before the
-    dedup exchange, so the distinct shuffles 3 longs per candidate
-    instead of two n_bits/60-long arrays — at 50k docs × 56 bands the
-    array-carrying distinct was the memory cliff. ``max_hamming``
-    additionally screens candidates before they ever reach the caller's
-    exact rerank: hamming/n_bits estimates θ/π, so random pairs
-    (θ≈π/2) sit tens of σ above any near-duplicate threshold.
+    Buckets larger than ``max_bucket`` are dropped (same boilerplate
+    guard as MinHash banding). ``max_bucket=None`` skips the cap AND its
+    window count entirely: an exactness gate that must emit every pair
+    pays no extra exchange for a cap that can never fire.
 
-    ALL adaptive tables land in ONE banding exchange (r9 restructure):
-    the explode enumerates every band of every signature in one pass,
-    the bucket cap is a window count over (band, key) riding that same
-    exchange, and the self-join reuses the window's partitioning — so
-    the 19–56 adaptive tables cost one exchange + one dedup, not a
-    pinned materialization barrier + groupBy-sizes + join-back. The r8
-    shape's eager ``pinned`` count launched an extra job and re-pinned
-    ~n·bands rows of signature arrays on EVERY call — persist churn +
-    scheduler round-trips that made the gates contention-fragile
-    (BENCH_r08: warm 26.9s > cold 10.4s; ~11× swings under host load).
+    ALL bands land in ONE banding exchange: the explode enumerates
+    every band of every signature, the bucket cap is a window count
+    over (band, key) riding that same exchange, and the self-join
+    reuses the window's (band, key) partitioning — one exchange plus
+    the dedup, no per-table jobs and no materialization barrier.
 
-    GROUPED-input support (r9, dedup-before-ANN): when ``sigs`` rows
-    stand for GROUPS of identical vectors, ``weight_col`` names the
-    member count — the bucket cap then sums weights, so capping fires
-    at exactly the same doc counts as ungrouped banding would — and
-    ``include_self=True`` keeps the (g, g) self-pair (hamming 0), which
-    exists iff the group has ≥1 surviving bucket: the precise condition
-    under which ungrouped banding would emit that group's within-group
-    doc pairs."""
+    Hamming folds bit_count(xor) across the word arrays and is computed
+    (and the arrays DROPPED) before the dedup exchange, so the distinct
+    shuffles 3 longs per candidate instead of two signature arrays — at
+    50k docs × 56 bands the array-carrying distinct was the memory
+    cliff. ``max_hamming`` additionally screens candidates before they
+    reach the caller's exact rerank: hamming/n_bits estimates θ/π, so
+    random pairs (θ≈π/2) sit tens of σ above any near-duplicate
+    threshold.
+
+    GROUPED input: when ``sigs`` rows stand for GROUPS of identical
+    vectors, ``weight_col`` names the member count — the bucket cap
+    then sums weights, so capping fires at exactly the same doc counts
+    as ungrouped banding would — and ``include_self=True`` keeps the
+    (g, g) self-pair (hamming 0), which exists iff the group has ≥1
+    surviving bucket: the precise condition under which ungrouped
+    banding would emit that group's within-group doc pairs."""
     from pyspark.sql import Window
 
     per_word = max(1, 60 // band_bits)
@@ -432,6 +349,7 @@ def srp_band_pairs_wide(
                     )
                     for w in range(n_words)
                     for c in range(per_word)
+                    if 60 * w + (c + 1) * band_bits <= n_bits
                 ]
             )
         ).alias("bb"),
@@ -456,14 +374,9 @@ def srp_band_pairs_wide(
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    # hamming + screen run BEFORE the dedup exchange, and the distinct
-    # carries (a, b, hamming) — three longs — never the signature
-    # arrays. The original shape distinct-ed rows holding two
-    # n_bits/60-long arrays: at 50k docs × 56 bands that exchange
-    # OOMed the sf1.0 probe after 433s. (An alternative that bands
-    # WITHOUT the arrays and rejoins signatures after the distinct
-    # measured 2× slower: the distinct then dedups the unfiltered
-    # candidate set, and the rejoin adds two more shuffles.)
+    # Banding WITHOUT the arrays and rejoining signatures after the
+    # distinct measured 2× slower: the distinct then dedups the
+    # unfiltered candidate set, and the rejoin adds two more shuffles.
     # Known CPU tradeoff of fold-before-distinct: a true near-dup pair
     # collides in most of the 56–92 adaptive bands, so the hot pairs
     # pay the 19–31-word bit_count fold once PER COLLIDING BAND instead
@@ -492,8 +405,8 @@ def srp_adaptive_band_bits(n: int, floor_bits: int = 10, cap_bits: int = 20) -> 
     and candidates grow quadratically — this is the knob that restores
     linear candidate growth at cluster scale.
 
-    The +2 margin is MEASURED, not guessed (r10 A/B on the 20%-salted-
-    dup corpus, candidate stage warm): each extra bit halves random
+    The +2 margin is MEASURED, not guessed (A/B on the 20%-salted-dup
+    corpus, candidate stage warm): each extra bit halves random
     collisions for ~15% more bands, and the trade is profitable for
     exactly two bits —
 
@@ -514,7 +427,7 @@ def srp_adaptive_bands(
     """Band COUNT that holds the recall contract as band_bits grows:
     a pair at angle θ collides per band with p1 = (1 − θ/π)^bits, which
     DECAYS exponentially in bits — so a fixed band count silently sheds
-    recall exactly when the adaptive bits kick in (round-7 sf0.1 sweep:
+    recall exactly when the adaptive bits kick in (sf0.1 sweep:
     6 bands at 13 bits missed 4 true pairs in the 0.94–0.98 cosine
     band). bands = ceil(ln(miss) / ln(1 − p1)) pins the per-pair miss
     probability at ``miss`` for pairs at ``design_cos`` or tighter —
@@ -533,7 +446,6 @@ def srp_knn_join(
     vec_col: str,
     id_col: str,
     k: int = 1,
-    n_bits: int = 60,
     band_bits: int | None = 10,
     max_bucket: int = 2000,
     design_cos: float = 0.94,
@@ -551,45 +463,40 @@ def srp_knn_join(
     shares no band are missed (approximate by contract — recall rises
     with more bands / fewer bits per band).
 
-    ``band_bits=None`` selects :func:`srp_adaptive_band_bits` from the
-    corpus size AND :func:`srp_adaptive_bands` from the chosen width —
-    bits keep random collisions linear, bands keep the per-pair miss
-    probability pinned (≤``miss`` at cosine ≥``design_cos``) as bits
-    grow. The (design_cos, miss) pair IS the recall/cost frontier: the
-    default (0.94, 1e-4) is the tight contract the exactness gates pin;
+    An explicit ``band_bits`` bands exactly as told: 6 bands, no
+    hamming screen, no duplication probe. ``band_bits=None`` selects
+    :func:`srp_adaptive_band_bits` from the corpus size AND
+    :func:`srp_adaptive_bands` from the chosen width — bits keep random
+    collisions linear, bands keep the per-pair miss probability pinned
+    (≤``miss`` at cosine ≥``design_cos``) as bits grow. The
+    (design_cos, miss) pair IS the recall/cost frontier: the default
+    (0.94, 1e-4) is the tight contract the exactness gates pin;
     (0.90, 1e-2) is the documented cheap production profile (~half the
     bands → ~half the candidate exchange). ``screen_cos`` is the
-    minimum cosine downstream callers gate on — the hamming pre-screen
-    is sized so a true pair AT that cosine survives with ~6σ margin
-    (deriving it from design_cos instead silently sheds 0.85-pairs as
-    signatures widen: one-sided miss ~4.5e-3 at 1140 bits, ~3.6e-2 at
-    1860 bits). The fixed 60-bit/10-bit setting remains for the
-    mechanism-exact oracle gate.
+    minimum cosine downstream callers gate on — the adaptive hamming
+    pre-screen is sized so a true pair AT that cosine survives with ~6σ
+    margin (deriving it from design_cos instead silently sheds
+    0.85-pairs as signatures widen: one-sided miss ~4.5e-3 at 1140
+    bits, ~3.6e-2 at 1860 bits).
 
-    ``key`` (the caller's memo key for ``df``) memoizes the wide
-    signature table per (key, width) on the ADAPTIVE wide-signature
-    ungrouped branch ONLY — the dedup branch (n_uniq <= 0.7*n_docs)
-    builds group-grain signatures keyed by a derived _gid (not
-    corpus-stable ids), and the explicit ``band_bits`` path uses the
-    60-bit table, so neither consults the memo; callers on those routes
-    get no caching (ADVICE r11).
+    ``key`` (the caller's memo key for ``df``) memoizes the signature
+    table per (key, width) on the ungrouped route. The dedup route
+    (n_uniq <= 0.7*n_docs) signs group representatives keyed by a
+    derived _gid, not corpus-stable ids, so it never consults the memo.
 
-    ``n_docs_stat`` / ``n_distinct_stat`` are CATALOG STATISTICS (r10):
-    the adaptive path needs the corpus size (to pick band bits) and the
+    ``n_docs_stat`` / ``n_distinct_stat`` are CATALOG STATISTICS: the
+    adaptive path needs the corpus size (to pick band bits) and the
     distinct-vector count (to pick the dedup-before-ANN route), and
     without them it pays one count job + one distinct-count job per
     call. At ingest those are one cheap aggregate recorded next to the
     data (``sources.layout.write_corpus_stats``) — a caller that passes
-    them gets a ZERO-extra-job plan; absent stats fall back to the
-    count jobs. The stats must describe the EXACT DataFrame passed —
-    stats of an ingested superset that the caller then filtered or
-    re-derived are wrong, and they steer the dedup-before-ANN route
-    and the group-size broadcast decision; an internally inconsistent
-    pair (distinct > total) is detected and discarded (fall back to
-    the probe) rather than trusted (ADVICE r10). Non-adaptive (explicit band_bits) callers never probe
-    duplication at all — the explicit-band contract is "band exactly as
-    told", and the r9 shape's unconditional probe was two full-scan
-    jobs of pure overhead on that path (ADVICE r9).
+    them gets a ZERO-extra-job plan. The stats must describe the EXACT
+    DataFrame passed: stats of an ingested superset that the caller
+    then filtered or re-derived steer the dedup route and the
+    group-size broadcast wrongly. An internally inconsistent pair
+    (distinct > total, or nonpositive distinct) is discarded in favour
+    of the probe. Explicit-band callers without stats never probe
+    duplication at all.
 
     Returns (id, nn_id, cosine, rank) for vectors with ≥1 candidate."""
     from pyspark.sql import Window
@@ -604,175 +511,137 @@ def srp_knn_join(
         if adaptive
         else 6
     )
-    if n_bits <= 60 and band_bits <= 10 and 60 // band_bits >= n_bands:
-        sigs = srp_signatures(df, vec_col, id_col, n_bits)
-        pairs = srp_band_pairs(sigs, id_col, n_bits, band_bits, max_bucket)
+    # bands never span words, so round the per-word layout up to whole
+    # 60-bit words covering the band count
+    per_word = max(1, 60 // band_bits)
+    n_words = max(1, -(-n_bands // per_word))
+    wide_bits = n_words * 60
+    # Adaptive path only: hamming screen ahead of the exact rerank.
+    # hamming/wide_bits estimates θ/π, so size the threshold from the
+    # MINIMUM cosine callers gate on (screen_cos). A true screen_cos pair
+    # sits 6σ inside thr (miss ≲1e-9 at any adaptive width), while the
+    # random bulk at θ≈π/2 (E[ham]=wide_bits/2, >15σ above thr even at
+    # 0.85) never reaches the vector join — unscreened, the sf1.0 probe
+    # joined dim-sized vectors onto 43n candidate pairs (433 s and an
+    # executor OOM). Explicit-band callers keep the unfiltered
+    # any-similarity contract.
+    thr = None
+    if adaptive:
+        import math
+
+        p_screen = math.acos(screen_cos) / math.pi
+        thr = math.ceil(
+            wide_bits * p_screen
+            + 6.0 * math.sqrt(wide_bits * p_screen * (1.0 - p_screen))
+        )
+    # DEDUP-BEFORE-ANN: when the corpus carries meaningful exact
+    # duplication, band one representative per DISTINCT vector and
+    # expand group pairs back to doc pairs afterward — the standard
+    # production composition (identical embeddings are the norm in
+    # crawled corpora: verbatim mirrors, boilerplate). Exactness is
+    # preserved end to end: the bucket cap sums member counts (fires at
+    # the same doc counts as ungrouped banding), the (g, g) self-pair
+    # marks groups with a surviving bucket (the exact condition for
+    # within-group pairs), signatures / hamming / cosine are functions
+    # of the vector so group-grain values ARE the doc-grain values.
+    # Same-window A/B at 10× clone data: grouped 10.6s vs ungrouped
+    # 48-94s; at a 99.8%-unique corpus the grouping's extra vector-grain
+    # window + expansion joins cost ~+5s of pure overhead — so the route
+    # is chosen from ONE distinct-count (uniq ≤ 0.7·n groups), read from
+    # the catalog stat when the caller has one and probed only on the
+    # adaptive path otherwise.
+    if (
+        n_distinct_stat is not None
+        and n_docs_stat is not None
+        and (n_distinct_stat > n_docs_stat or n_distinct_stat <= 0)
+    ):
+        n_distinct_stat = None
+    if n_distinct_stat is not None:
+        n_uniq = n_distinct_stat
+        if n_docs is None:
+            n_docs = n_docs_stat if n_docs_stat is not None else df.count()
+    elif adaptive:
+        n_uniq = df.select(vec_col).distinct().count()
     else:
-        # bands never span words, so round the per-word layout up to
-        # whole 60-bit words covering the recall-derived band count
-        per_word = max(1, 60 // band_bits)
-        n_words = max(1, -(-n_bands // per_word))
-        wide_bits = n_words * 60
-        # ADAPTIVE path only: hamming screen ahead of the exact rerank.
-        # hamming/wide_bits estimates θ/π, so size the threshold from
-        # the MINIMUM cosine callers gate on (screen_cos, default 0.85
-        # — NOT design_cos: a screen derived from the 0.90 design angle
-        # one-sidedly misses true 0.85-pairs with probability ~3e-4 at
-        # 600 bits, ~4.5e-3 at 1140, ~3.6e-2 at 1860 — it decays recall
-        # exactly as adaptive widths grow, undoing srp_adaptive_bands).
-        # A true screen_cos pair sits 6σ inside thr (miss ≲1e-9 at any
-        # adaptive width), while the random bulk at θ≈π/2
-        # (E[ham]=wide_bits/2, >15σ above thr even at 0.85) never
-        # reaches the vector join — the rerank cost cliff the sf1.0
-        # probe hit (433s + executor OOM from joining dim-sized vectors
-        # onto 43n candidate pairs). Explicit-band callers keep the
-        # unfiltered any-similarity contract.
-        thr = None
-        if adaptive:
-            import math
+        n_uniq = None
+    if n_uniq is None or n_uniq > 0.7 * n_docs:
+        # The signature table is corpus-keyed index state (n rows x
+        # n_words longs); callers whose input is an immutable corpus
+        # pass its memo key and repeated calls skip the projection
+        # matmul. Keyed by width so the tight and cheap contracts
+        # (different band counts => different word counts) each cache
+        # their own table.
+        def sign() -> DataFrame:
+            return srp_signatures(df, vec_col, id_col, wide_bits)
 
-            p_screen = math.acos(screen_cos) / math.pi
-            thr = math.ceil(
-                wide_bits * p_screen
-                + 6.0 * math.sqrt(wide_bits * p_screen * (1.0 - p_screen))
-            )
-        # DEDUP-BEFORE-ANN (r9): when the corpus carries meaningful
-        # exact duplication, band one representative per DISTINCT
-        # vector and expand group pairs back to doc pairs afterward —
-        # the standard production composition (identical embeddings are
-        # the norm in crawled corpora: verbatim mirrors, boilerplate).
-        # Exactness is preserved end to end: the bucket cap sums member
-        # counts (fires at the same doc counts as ungrouped banding),
-        # the (g, g) self-pair marks groups with a surviving bucket
-        # (the exact condition for within-group pairs), signatures /
-        # hamming / cosine are functions of the vector so group-grain
-        # values ARE the doc-grain values. Same-window A/B at 10× clone
-        # data: grouped 10.6s vs ungrouped 48-94s; at a 99.8%-unique
-        # corpus the grouping's extra vector-grain window + expansion
-        # joins cost ~+5s of pure overhead — so the path is chosen from
-        # ONE distinct-count (uniq ≤ 0.7·n groups; an aggregate at
-        # unique-vector grain, trivial next to the banding it replaces)
-        # — read from the catalog stat when the caller has one, probed
-        # only on the ADAPTIVE path otherwise (explicit-band callers
-        # take the ungrouped route with zero extra jobs).
-        # Catalog-stats CONTRACT: n_docs_stat/n_distinct_stat must
-        # describe the EXACT DataFrame passed (not the ingested superset
-        # a filter/projection was applied to) — they steer the route and
-        # the group-size broadcast below. A stat pair that is internally
-        # inconsistent (distinct > total, or nonpositive) is provably
-        # stale/wrong, so discard it and fall back to the probe rather
-        # than let it force a driver-sized broadcast (ADVICE r10).
-        if (
-            n_distinct_stat is not None
-            and n_docs_stat is not None
-            and (n_distinct_stat > n_docs_stat or n_distinct_stat <= 0)
-        ):
-            n_distinct_stat = None
-        if n_distinct_stat is not None:
-            n_uniq = n_distinct_stat
-            if n_docs is None:
-                n_docs = n_docs_stat if n_docs_stat is not None else df.count()
-        elif adaptive:
-            n_uniq = df.select(vec_col).distinct().count()
+        if key is None:
+            sigs = sign()
         else:
-            n_uniq = None
-        if n_uniq is None or n_uniq > 0.7 * n_docs:
-            # ``key`` (r11b): the wide signature table is corpus-keyed
-            # index state (n rows x n_words longs — the same artifact
-            # class as the memoized 60-bit table the mechanism gate
-            # shares); callers whose input is an immutable corpus pass
-            # its memo key and warm calls skip the per-call projection
-            # matmul. Keyed by width so the tight and cheap contracts
-            # (different band counts => different word counts) each
-            # cache their own table.
-            def sign() -> DataFrame:
-                return srp_signatures_wide(df, vec_col, id_col, wide_bits)
+            from ..plans.materialize import memo
 
-            if key is None:
-                sigs = sign()
-            else:
-                from ..plans.materialize import memo
-
-                sigs = memo(
-                    df.sparkSession,
-                    (*key, "srp_signatures_wide", vec_col, id_col, wide_bits),
-                    sign,
-                )
-            pairs = srp_band_pairs_wide(
-                sigs, id_col, wide_bits, band_bits, max_bucket, max_hamming=thr
+            sigs = memo(
+                df.sparkSession,
+                (*key, "srp_signatures", vec_col, id_col, wide_bits),
+                sign,
             )
-            va = df.select(
-                F.col(id_col).alias("a"), F.col(vec_col).alias("_va")
-            )
-            vb = df.select(
-                F.col(id_col).alias("b"), F.col(vec_col).alias("_vb")
-            )
-            scored = (
-                _rerank_spread(pairs)
-                .join(va, "a")
-                .join(vb, "b")
-                .withColumn("_cos", cosine(F.col("_va"), F.col("_vb")))
-                .select("a", "b", "_cos")
-            )
-            return _topk_from_scored(scored, id_col, k)
-        wv = Window.partitionBy(vec_col)
-        m = df.select(F.col(id_col), F.col(vec_col)).withColumn(
-            "_gid", F.min(id_col).over(wv)
+        pairs = srp_band_pairs(
+            sigs, id_col, wide_bits, band_bits, max_bucket, max_hamming=thr
         )
-        members = m.select(F.col("_gid"), F.col(id_col).alias("_m"))
-        wt = members.groupBy("_gid").agg(F.count(F.lit(1)).alias("_wt"))
-        uniq = m.filter(F.col(id_col) == F.col("_gid")).select(
-            F.col("_gid"), F.col(vec_col)
-        )
-        # the group-size table is at unique-vector grain (up to 0.7·n
-        # rows) — force the broadcast only while it provably fits (two
-        # longs × 2M rows ≈ 32 MB); above that let AQE pick the
-        # strategy rather than blow the driver on a dim-sized build
-        # side (ADVICE r9)
-        wt_build = F.broadcast(wt) if n_uniq <= 2_000_000 else wt
-        sigs_g = srp_signatures_wide(uniq, vec_col, "_gid", wide_bits).join(
-            wt_build, "_gid"
-        )
-        gpairs = srp_band_pairs_wide(
-            sigs_g,
-            "_gid",
-            wide_bits,
-            band_bits,
-            max_bucket,
-            max_hamming=thr,
-            weight_col="_wt",
-            include_self=True,
-        )
-        vga = uniq.select(F.col("_gid").alias("a"), F.col(vec_col).alias("_va"))
-        vgb = uniq.select(F.col("_gid").alias("b"), F.col(vec_col).alias("_vb"))
-        scored_g = (
-            _rerank_spread(gpairs)
-            .join(vga, "a")
-            .join(vgb, "b")
+        va = df.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
+        vb = df.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
+        scored = (
+            _rerank_spread(pairs)
+            .join(va, "a")
+            .join(vb, "b")
             .withColumn("_cos", cosine(F.col("_va"), F.col("_vb")))
             .select("a", "b", "_cos")
         )
-        ma = members.select(F.col("_gid").alias("a"), F.col("_m").alias("_da"))
-        mb = members.select(F.col("_gid").alias("b"), F.col("_m").alias("_db"))
-        scored = (
-            scored_g.join(ma, "a")
-            .join(mb, "b")
-            # cross-group pairs expand fully; within-group (a == b)
-            # pairs keep one orientation (the explode below symmetrizes)
-            .filter((F.col("a") != F.col("b")) | (F.col("_da") < F.col("_db")))
-            .select(
-                F.col("_da").alias("a"), F.col("_db").alias("b"), F.col("_cos")
-            )
-        )
         return _topk_from_scored(scored, id_col, k)
-    va = df.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
-    vb = df.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
-    scored = (
-        _rerank_spread(pairs)
-        .join(va, "a")
-        .join(vb, "b")
+    wv = Window.partitionBy(vec_col)
+    m = df.select(F.col(id_col), F.col(vec_col)).withColumn(
+        "_gid", F.min(id_col).over(wv)
+    )
+    members = m.select(F.col("_gid"), F.col(id_col).alias("_m"))
+    wt = members.groupBy("_gid").agg(F.count(F.lit(1)).alias("_wt"))
+    uniq = m.filter(F.col(id_col) == F.col("_gid")).select(
+        F.col("_gid"), F.col(vec_col)
+    )
+    # the group-size table is at unique-vector grain (up to 0.7·n rows)
+    # — force the broadcast only while it provably fits (two longs × 2M
+    # rows ≈ 32 MB); above that let AQE pick the strategy rather than
+    # blow the driver on a dim-sized build side
+    wt_build = F.broadcast(wt) if n_uniq <= 2_000_000 else wt
+    sigs_g = srp_signatures(uniq, vec_col, "_gid", wide_bits).join(
+        wt_build, "_gid"
+    )
+    gpairs = srp_band_pairs(
+        sigs_g,
+        "_gid",
+        wide_bits,
+        band_bits,
+        max_bucket,
+        max_hamming=thr,
+        weight_col="_wt",
+        include_self=True,
+    )
+    vga = uniq.select(F.col("_gid").alias("a"), F.col(vec_col).alias("_va"))
+    vgb = uniq.select(F.col("_gid").alias("b"), F.col(vec_col).alias("_vb"))
+    scored_g = (
+        _rerank_spread(gpairs)
+        .join(vga, "a")
+        .join(vgb, "b")
         .withColumn("_cos", cosine(F.col("_va"), F.col("_vb")))
         .select("a", "b", "_cos")
+    )
+    ma = members.select(F.col("_gid").alias("a"), F.col("_m").alias("_da"))
+    mb = members.select(F.col("_gid").alias("b"), F.col("_m").alias("_db"))
+    scored = (
+        scored_g.join(ma, "a")
+        .join(mb, "b")
+        # cross-group pairs expand fully; within-group (a == b) pairs
+        # keep one orientation (the explode below symmetrizes)
+        .filter((F.col("a") != F.col("b")) | (F.col("_da") < F.col("_db")))
+        .select(F.col("_da").alias("a"), F.col("_db").alias("b"), F.col("_cos"))
     )
     return _topk_from_scored(scored, id_col, k)
 

@@ -11,21 +11,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.materialize import memo, pinned
+from ..session import session_conf
+
+# The Pregel loops below run fixed-shape plans over pinned inputs, where
+# AQE's runtime re-planning only adds stage-barrier jobs.
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 
 def symmetric_adjacency(e: DataFrame, key: tuple | None = None) -> DataFrame:
     """Symmetric adjacency (node, other) of an undirected (u, v) edge
-    list, HASH-PARTITIONED on ``node`` and optionally memoized (r11b).
+    list, HASH-PARTITIONED on ``node`` and optionally memoized.
 
     The per-round Pregel operators (k-core, BFS) probe this frame every
     round through broadcast semi-joins and then aggregate by ``node`` —
-    rebuilding the two-scan union per round re-evaluated the edge pool
-    twice per round (the r11b event log showed one 64-task ~0.65 s
-    stage per peel round that was exactly this), and the groupBy paid
-    its exchange each time. A pinned copy partitioned on the aggregate
-    key is scanned from cache and satisfies the groupBy's required
-    distribution outright (guide §2.4 — operations keyed the same way
-    share one exchange; broadcast semi-joins preserve the layout).
+    rebuilding the two-scan union per round re-evaluates the edge source
+    twice per round, and the groupBy pays its exchange each time. A
+    pinned copy partitioned on the aggregate key is scanned from cache
+    and satisfies the groupBy's required distribution outright (guide
+    §2.4 — operations keyed the same way share one exchange; broadcast
+    semi-joins preserve the layout).
     ``key`` (the caller's memo key for the edge source, see
     ``plans.materialize.memo``) memoizes the frame per session;
     ``key=None`` keeps the inline shape for one-shot callers."""
@@ -62,7 +66,7 @@ def triangle_census(e: DataFrame, pool: str = "tri_edges") -> DataFrame:
     the measured size is actually under the threshold).
 
     An ``e`` the caller already persisted (the memoized per-corpus
-    co-purchase edge list shared by the whole graph family, r11) is
+    co-purchase edge list shared by the whole graph family) is
     used as is: ``pinned`` skips persisted frames."""
     e = pinned(e, pool)
     deg = (
@@ -143,22 +147,22 @@ def pagerank(
     scale use ``checkpoint`` (reliable storage) for the same truncation
     with executor-failure tolerance.
 
-    r12 — the loop's DRIVER overhead was half its wall (event log: 35
-    jobs, 2.7 s of job time inside a 4.8 s warm run). Two changes, both
-    bit-identical (probe: identical top-20 rows across all variants):
+    The loop costs the driver one action, not one per iteration:
 
-    - ``localCheckpoint(eager=False)``: the per-iteration eager
-      materialization job is dropped; each checkpoint materializes (and
-      truncates lineage) inside the first job that reads it, so the
-      whole fixed-count loop drains in ONE action instead of 10+1.
-    - AQE is disabled AROUND the loop (restored after): every
-      iteration is the same fixed-shape join+aggregate over a pinned,
-      size-known input — per-iteration runtime re-optimization and its
-      stage-barrier jobs are pure driver latency here, at any scale
-      (the shuffle width stays the session's configured partitions,
-      the same scale knob every static exchange uses). Probe at sf0.1:
-      eager/AQE-on 7.4-62 s (unstable under contention), lazy/AQE-off
-      6.2-7.3 s stable.
+    - ``localCheckpoint(eager=False)`` materializes each rank frame (and
+      truncates its lineage) inside the first job that reads it, so the
+      whole fixed-count loop drains in the caller's single action.
+    - The loop runs with AQE off (``session_conf``): every iteration is
+      the same fixed-shape join+aggregate over a pinned, size-known
+      input, so runtime re-optimization only adds stage-barrier jobs
+      (the shuffle width stays the session's configured partitions).
+      A lazy checkpoint plans when it is called, so the whole loop stays
+      inside the block. Probe at sf0.1: eager/AQE-on 7.4-62 s, lazy/
+      AQE-off 6.2-7.3 s, identical top-20 rows.
+
+    ``key`` (the memo key of an immutable edge list) memoizes the
+    degree table, the degree-annotated edges and the node count, so a
+    repeated call skips their rebuild jobs.
     """
     spark = e.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
@@ -170,12 +174,6 @@ def pagerank(
     # neutral; at cluster scale (ranks too big to broadcast) it removes
     # 10 full edge shuffles. One extra exchange at build time, amortized
     # over the fixed iteration count.
-    # ``key`` (r11): callers whose edge list is itself memoized and
-    # immutable (the per-corpus co-purchase graph) pass its memo key and
-    # reuse the built tables — rebuilding the degree-annotated table
-    # every call was ~4 jobs of pure recompute. r12: the node-grain
-    # degree table and its count ride the same entry (the count job and
-    # the degree groupBy re-ran per warm call).
     tag = ("pagerank",) if key is None else (*key, "pagerank")
 
     def build() -> tuple[DataFrame, DataFrame, int]:
@@ -190,9 +188,7 @@ def pagerank(
         return degp, edeg, degp.count()
 
     degp, edeg, n = build() if key is None else memo(spark, tag, build)
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with session_conf(spark, _AQE_OFF):
         ranks = degp.select(
             F.col("src").alias("node"), F.lit(1.0 / n).alias("rank")
         )
@@ -208,8 +204,6 @@ def pagerank(
                 F.col("dst").alias("node"),
                 (F.lit(base) + F.lit(damping) * F.col("s")).alias("rank"),
             ).localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return ranks
 
 
@@ -230,44 +224,31 @@ def kcore_peel_trace(
     remaining rounds are no-ops that re-emit the same counts.
 
     Pregel shape, ONE degree aggregate (two semi-joins + groupBy) per
-    round — r11: the alive-edge count is read off the NEXT round's
-    degree table (sum(deg)/2 ≡ the edges-with-both-endpoints-alive
-    count, exactly: each surviving edge contributes one row per
-    direction to the symmetric adjacency), which the peel needs anyway,
-    instead of a second E-sized semi-join pass per round. The degree
-    frame is ``localCheckpoint``-ed per round (O(nodes), 2 columns —
-    same lineage-truncation rationale as pagerank; at cluster scale use
-    ``checkpoint``).
-
-    r11b: the per-round driver actions are fused into ONE scalar
-    aggregate over the checkpointed degree frame — (row count,
-    Σdeg, #(deg ≥ k)):
+    round. The degree frame is ``localCheckpoint``-ed per round
+    (O(nodes), 2 columns — same lineage-truncation rationale as
+    pagerank; at cluster scale use ``checkpoint``). Each round costs
+    the driver ONE action, a fused scalar census over that round's
+    degree frame — (row count, Σdeg, #(deg ≥ k)) — which relies on:
 
     - ``n_alive(r) = #(deg_{r-1} ≥ k)``, exactly: a node absent from
       ``deg_{r-1}`` has zero alive neighbors, and 0 < k (asserted), so
-      the filter and the count agree row-for-row — the separate
-      ``alive.count()`` job per round is removed;
-    - ``alive`` itself is a one-op filter over the checkpointed degree
-      frame, so its own ``localCheckpoint`` (one eager job per round)
-      is dropped too — the two semi-join consumers re-evaluate a cheap
-      cached-scan filter instead;
-    - round 0's node/edge counts come from the same fused census over
-      ``deg_0`` (every node of ``sym`` has ≥1 neighbor alive at round
-      0, so ``count(deg_0) = n_nodes``, and ``Σdeg_0/2 = |E|``).
+      the filter and the count agree row-for-row;
+    - ``n_edges(r) = Σdeg_r / 2``, exactly: each edge with both
+      endpoints alive contributes one row per direction to the
+      symmetric adjacency, so the next round's degree table (which the
+      peel needs anyway) is also this round's edge census;
+    - round 0's counts come from the census over ``deg_0`` (every node
+      of ``sym`` has ≥1 neighbor alive at round 0, so
+      ``count(deg_0) = n_nodes`` and ``Σdeg_0/2 = |E|``);
+    - ``alive`` is a one-op filter over the checkpointed degree frame,
+      so it needs no checkpoint of its own, and the degree checkpoint is
+      lazy, so the census job is the one that materializes it.
 
-    Driver actions per round: 2 (checkpoint + census) instead of 4.
-
-    r12: ONE driver action per round — the degree checkpoint is LAZY
-    (``eager=False``), so the census aggregate is the job that both
-    materializes the checkpoint blocks and folds the three scalars
-    (the separate eager-checkpoint job per round is gone), and AQE is
-    disabled around the loop (restored after): every round is the same
-    fixed-shape semi-join+aggregate over the pinned adjacency, so
-    per-round runtime re-optimization is pure driver latency. Probe at
-    sf0.1 (6 rounds): 2.9 s eager/AQE-on → 1.7 s lazy/AQE-off, traces
-    bit-identical.
-
-    ``key`` memoizes the symmetric adjacency (``symmetric_adjacency``).
+    The adjacency is built (and memoized under ``key``, see
+    ``symmetric_adjacency``) before AQE is switched off; only the
+    fixed-shape peel loop runs without AQE, where per-round runtime
+    re-optimization is pure driver latency. Probe at sf0.1 (6 rounds):
+    2.9 s eager/AQE-on, 1.7 s lazy/AQE-off, traces bit-identical.
     """
     if k < 1:
         raise ValueError("kcore_peel_trace requires k >= 1")
@@ -275,49 +256,42 @@ def kcore_peel_trace(
     # frame is not persisted, so checking it would re-pin the caller's
     # memoized edge list and add a count job
     edges = pinned(e, "kcore_edges").select("u", "v")
-    spark = e.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        sym = symmetric_adjacency(edges, key)
-        alive = sym.select("node").distinct().localCheckpoint()
+    sym = symmetric_adjacency(edges, key)
 
-        def alive_degrees(alive_df: DataFrame) -> DataFrame:
-            return (
-                sym.join(alive_df, "node", "leftsemi")
-                .join(
-                    alive_df.select(F.col("node").alias("other")),
-                    "other",
-                    "leftsemi",
-                )
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .localCheckpoint(eager=False)
+    def alive_degrees(alive_df: DataFrame) -> DataFrame:
+        return (
+            sym.join(alive_df, "node", "leftsemi")
+            .join(
+                alive_df.select(F.col("node").alias("other")),
+                "other",
+                "leftsemi",
             )
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .localCheckpoint(eager=False)
+        )
 
-        def census(deg_df: DataFrame) -> tuple[int, int, int]:
-            row = deg_df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum("deg"), F.lit(0)).cast("long").alias("s"),
-                F.coalesce(
-                    F.sum((F.col("deg") >= k).cast("long")), F.lit(0)
-                ).cast("long").alias("ge"),
-            ).collect()[0]
-            return int(row["n"]), int(row["s"]) // 2, int(row["ge"])
+    def census(deg_df: DataFrame) -> tuple[int, int, int]:
+        row = deg_df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum("deg"), F.lit(0)).cast("long").alias("s"),
+            F.coalesce(
+                F.sum((F.col("deg") >= k).cast("long")), F.lit(0)
+            ).cast("long").alias("ge"),
+        ).collect()[0]
+        return int(row["n"]), int(row["s"]) // 2, int(row["ge"])
 
+    with session_conf(e.sparkSession, _AQE_OFF):
+        alive = sym.select("node").distinct().localCheckpoint()
         deg = alive_degrees(alive)  # degrees feeding the round-1 peel
         n0, e0, ge = census(deg)
         trace = [(0, n0, e0)]
         for r in range(1, rounds + 1):
             alive = deg.filter(F.col("deg") >= k).select("node")
-            # next round's degrees double as this round's edge census:
-            # sum over alive nodes of alive-neighbor counts = 2*|e_alive|
             deg = alive_degrees(alive)
             n_alive = ge  # #(deg_{r-1} >= k), carried from the last census
             _, n_edges, ge = census(deg)
             trace.append((r, n_alive, n_edges))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return trace
 
 
@@ -336,22 +310,15 @@ def bfs_hop_counts(
     frontier through the symmetric edge list, a distinct, and one
     left_anti against the visited set — all hash-partitioned on the node
     key. Frontier and visited frames are ``localCheckpoint``-truncated
-    (O(nodes), 1 column); per-hop driver traffic is one scalar count.
+    (O(nodes), 1 column) and lazy: the per-hop ``frontier.count()`` is
+    the hop's one driver action and materializes the frontier, and the
+    visited union materializes inside the next hop's anti-join.
 
-    r12: ONE driver action per hop — frontier/visited checkpoints are
-    LAZY (the per-hop ``frontier.count()`` materializes the frontier;
-    the visited union materializes inside the next hop's anti-join) and
-    AQE is disabled around the fixed-shape loop (restored after) — the
-    same per-round driver-latency fix as ``kcore_peel_trace``.
-
-    ``key`` memoizes the symmetric adjacency (``symmetric_adjacency``).
+    As in ``kcore_peel_trace``, the adjacency (memoized under ``key``)
+    is built first and only the fixed-shape hop loop runs without AQE.
     """
-    edges = e.select("u", "v")
-    spark = e.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        sym = symmetric_adjacency(edges, key)
+    sym = symmetric_adjacency(e.select("u", "v"), key)
+    with session_conf(e.sparkSession, _AQE_OFF):
         frontier = seeds.select("node").distinct().localCheckpoint()
         visited = frontier
         trace = [(0, frontier.count())]
@@ -365,6 +332,4 @@ def bfs_hop_counts(
             )
             visited = visited.unionAll(frontier).localCheckpoint(eager=False)
             trace.append((h, frontier.count()))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return trace

@@ -533,9 +533,8 @@ def _srp_sigs60(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join sides. Without a materialization point the banding
     self-join holds the signature subtree TWICE (one per side): the
     pandas-UDF projection and its generated code both run and compile
-    twice, which r10's bench measured as +7.4s on the gate's cold pass
-    after the cap-window removal took the old exchange boundary away.
-    The table is n rows of (id, long) — the cheapest possible pin."""
+    twice (measured +7.4s on the gate's cold pass). The table is n rows
+    of (id, one-word array) — the cheapest possible pin."""
     return memo(
         spark,
         ("srp_sigs60", sf_dir),

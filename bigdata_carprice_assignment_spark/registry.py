@@ -36,120 +36,9 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver's CORRECTNESS check records the FIRST 50 registered queries,
-# so registration order decides which queries get the hard hash-checked
-# signal. Cumulative driver-green coverage strictly grows: queries green
-# in r1-r3 (143 checked, all green at last check) are rotated BEHIND the
-# window so never-checked oracle queries get their first hard check.
-PRIORITY: tuple[str, ...] = (
-    # ---- round-11 window (50): the ONE new oracle query + the COMPLETE
-    # r4-checked block (49 — every query whose latest hash check is
-    # round 4; VERDICT r10 Next #2), per the rotation discipline in
-    # COVERAGE.md. 1 + 49 fills the window exactly.
-    #
-    # Position 1: srp_knn_join_ingested_stats_gate (NEW, r11) — the
-    # end-to-end catalog contract: write_corpus_stats at ingest,
-    # read_corpus_stats (vec_col-checked) at query time, srp_knn_join
-    # routed off the read-back stats file (VERDICT r10 Next #5).
-    "srp_knn_join_ingested_stats_gate",
-    # Positions 2-50: the complete r4-checked block (49, alphabetical;
-    # clears the r4 debt — the r4 window's 50th member,
-    # attribution_lag_percentiles, was already re-checked green in r10).
-    #
-    # Round-11 TOUCHED paths verified locally instead of taking window
-    # slots (same treatment the judge accepted for the r10 temp-dir
-    # change): click_purchase_attribution's hour-chunk now derives from
-    # the casted-timestamp microsecond expression (ADVICE r10 — the
-    # chunk is an internal equi-key derived identically on both join
-    # sides, so output is unchanged by construction; oracle-verified at
-    # sf0.001+sf0.01 this round), and srp_knn_join gained a
-    # stats-consistency clamp that only fires on provably-wrong stats
-    # (benched gates pass consistent stats; behavior unchanged there,
-    # pytest-pinned + both SRP gates oracle-verified locally).
-    "anderson_darling_k_sample",
-    "bloom_prefilter_join_audit",
-    "brand_rank_kendall_tau",
-    "bulk_part_suppliers",
-    "carprice_cleaned",
-    "carprice_ml_matrix",
-    "char_ngram_jaccard_pairs",
-    "click_purchase_reconciliation",
-    "cohort_ltv_curve",
-    "copurchase_triangle_count",
-    "cross_source_dup_matrix",
-    "daily_revenue_autocorrelation",
-    "distributed_exact_quantiles_check",
-    "embedding_cosine_calibration",
-    "event_burst_dedup",
-    "event_conditional_entropy",
-    "event_value_mad_by_type",
-    "group_aware_split_leakage_audit",
-    "grouped_distributed_quantiles_check",
-    "grubbs_outlier_test",
-    "incremental_daily_refresh_accounting",
-    "jackknife_mean_se",
-    "join_key_skew_report",
-    "kaplan_meier_second_order",
-    "kruskal_wallis_components",
-    "levene_brown_forsythe_components",
-    "logrank_test_components",
-    "mann_kendall_trend_test",
-    "min_cost_supplier_per_part",
-    "nation_year_profit",
-    "neyman_allocation_by_lang",
-    "order_value_psi_drift",
-    "packing_efficiency_by_budget",
-    "prefix_filter_jaccard_pairs",
-    "qty_price_spearman",
-    "ratio_metric_delta_se",
-    "rolling_7d_active_users",
-    "scd2_event_type_history",
-    "schema_evolution_roundtrip",
-    "seasonal_naive_mape",
-    "sketch_set_overlap_check",
-    "source_unigram_kl",
-    "theil_sen_revenue_trend",
-    "time_hierarchy_rollup",
-    "top1pct_customer_revenue_share",
-    "top_user_day_journeys",
-    "two_proportion_ztest_components",
-    "vocab_coverage_thresholds",
-    "weighted_median_price_by_brand",
-    # ---- positions 51-70: the 20 round-1 rows-only library-fit
-    # queries (VERDICT r10 Next #7) queued at the HEAD of the next
-    # window — the driver checks exactly 50, so they take r12's slots;
-    # this round each was re-run locally (rows>0 + metric bounds) and
-    # the results recorded in SCALE.md.
-    "carprice_cluster_anova",
-    "carprice_elbow_curve",
-    "carprice_kmeans_profile",
-    "carprice_lm_coefficients",
-    "carprice_model_metrics",
-    "carprice_nb_confusion",
-    "carprice_pca_variance",
-    "carprice_radar_profile",
-    "carprice_rf_feature_importances",
-    "carprice_rules_top_lift",
-    "cosine_topk_lsh_vs_query",
-    "embedding_near_dup_pairs",
-    "embeddings_kmeans_elbow",
-    "embeddings_kmeans_sizes",
-    "embeddings_pca_variance",
-    "ivf_topk_vs_query",
-    "minhash_near_dup_documents",
-    "ngram_jaccard_near_dups",
-    "order_value_regression_metrics",
-    "simhash_candidate_pairs",
-    # ---- everything else: previously driver-hash-green and rows-only
-    # queries keep module registration order (handled by load_all: any
-    # registered query not named here follows after).
-)
-
-
 def load_all() -> None:
-    """Import every query module so registration side-effects run, then
-    pin the PRIORITY queries to the front of the registration order."""
-    global QUERIES
+    """Import every query module so registration side-effects run;
+    ``QUERIES`` keeps module registration order."""
     from .queries import (  # noqa: F401
         analytics,
         carprice,
@@ -166,11 +55,3 @@ def load_all() -> None:
         trends,
         windows,
     )
-
-    missing = [n for n in PRIORITY if n not in QUERIES]
-    if missing:
-        raise RuntimeError(f"PRIORITY names not registered: {missing}")
-    ordered = {n: QUERIES[n] for n in PRIORITY}
-    ordered.update((n, f) for n, f in QUERIES.items() if n not in ordered)
-    QUERIES.clear()
-    QUERIES.update(ordered)

@@ -10,6 +10,8 @@ on data-sized results, no driver-side loops over rows).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -68,3 +70,35 @@ def get_spark(app_name: str = "bigdata_carprice_assignment_spark") -> SparkSessi
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def session_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set runtime SQL confs for the block, restoring each key on exit.
+
+    Each key's prior value is restored in ``finally``, also when the
+    body raises; a key that was unset before the block is unset again.
+
+    Two conditions for callers:
+
+    - The override is session-global: every thread sharing ``spark``
+      sees it while the block runs, and two threads overriding the same
+      key restore in whatever order they exit. It is not reentrant
+      across threads.
+    - A conf only affects plans that are planned inside the block. A
+      DataFrame built inside but first executed after it is planned
+      under the restored values; ``localCheckpoint(eager=False)`` plans
+      when it is called, so a loop of lazy checkpoints is planned
+      wholly inside.
+    """
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

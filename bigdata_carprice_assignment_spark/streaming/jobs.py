@@ -14,9 +14,19 @@ drain); in production the same plans attach to Kafka/files unchanged.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import session_conf
+
+# Shuffle partitions of a replay drain; see ``run_to_completion``.
+STATE_PARTITIONS = 8
+
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -271,66 +281,77 @@ def run_foreach_batch_sink(
     return written
 
 
+def _sweep_dead_checkpoints(base: str) -> None:
+    """Remove the ``{pid}-...`` checkpoint dirs under ``base`` whose
+    process no longer exists (a killed replay never reaches its own
+    cleanup). A live process's dirs are never touched: several drivers
+    (parallel test sessions, benchmark probes) share one base."""
+    try:
+        names = os.listdir(base)
+    except FileNotFoundError:
+        return
+    for name in names:
+        pid = name.split("-", 1)[0]
+        if not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+        except PermissionError:
+            pass  # alive, owned by another user
+
+
 def run_to_completion(
-    stream_df: DataFrame,
-    name: str,
-    output_mode: str = "complete",
-    state_partitions: int = 8,
+    stream_df: DataFrame, name: str, output_mode: str = "complete"
 ) -> DataFrame:
     """Drive a streaming plan over the currently-available input and
     return the materialized result (memory sink + processAllAvailable —
     the documented local smoke pattern).
 
-    ``state_partitions`` bounds the replay's STATE-STORE fan-out: a
-    streaming query instantiates one state store per shuffle partition
-    per stateful operator (a stream-stream join keeps FOUR stores per
-    partition), and each micro-batch commits a delta file per store —
-    at the session's 32 shuffle partitions the attribution replay paid
-    128 store commits per batch of pure fixture overhead (13.1s cold /
-    8.7s warm in BENCH_r10, and the prime noise amplifier in contended
-    warm passes — VERDICT r10 Next #6). Results are partition-count
-    invariant, so the replays bound it to 8 for the drain and restore
-    the session conf after. On a real cluster the same plans run with
-    shuffle partitions sized to the stream volume — this knob is replay
-    posture, not engine semantics."""
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    # r12 (guide §6 — I/O layout): the drain's checkpoint (offset WAL,
-    # commit log, state-store deltas) is EPHEMERAL fixture state — the
-    # default temp dir sits on spinning /tmp, and its fsync-ish writes
-    # were the replay family's noise amplifier (probe: first-rep
-    # outliers 4.7-12.8 s on /tmp vs flat 2.0-3.3 s on tmpfs; steady
-    # state ~10% faster). Place it on a RAM-backed dir when one exists
-    # (overridable via SPARK_GRAFT_STREAM_CKPT_DIR), fall back to the
-    # engine default otherwise, and remove it after the drain. In
-    # production the same plans run with a RELIABLE checkpointLocation
-    # (object store) — this knob is replay posture, not engine
-    # semantics, exactly like ``state_partitions``.
-    import os
-    import shutil
-    import uuid
+    The drain runs with ``STATE_PARTITIONS`` shuffle partitions
+    (``session_conf``): a streaming query keeps one state store per
+    shuffle partition per stateful operator (a stream-stream join keeps
+    four per partition), and each micro-batch commits a delta file per
+    store, so at a 32-partition session width the attribution replay
+    pays 128 store commits per batch of pure fixture overhead. Results
+    do not depend on the partition count. On a real cluster the same
+    plans run with shuffle partitions sized to the stream volume.
 
+    The checkpoint (offset WAL, commit log, state-store deltas) is
+    ephemeral replay state, so it goes to a RAM-backed dir when one
+    exists: its small synced writes on a disk-backed /tmp made the
+    replay times noisy (probe: first-rep outliers 4.7-12.8 s on /tmp,
+    flat 2.0-3.3 s on tmpfs). ``SPARK_GRAFT_STREAM_CKPT_DIR`` overrides
+    the base; with neither, Spark's default temp checkpoint is used.
+    Each drain writes ``{base}/{pid}-{name}-{uuid}`` and removes it
+    after the drain; dirs left by dead processes are swept on entry.
+    In production the same plans run with a reliable checkpointLocation
+    (object store)."""
+    spark = stream_df.sparkSession
     ckpt_base = os.environ.get("SPARK_GRAFT_STREAM_CKPT_DIR")
     if ckpt_base is None and os.access("/dev/shm", os.W_OK):
         ckpt_base = "/dev/shm/spark_graft_stream_ckpt"
     ckpt: str | None = None
+    writer = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+    )
+    if ckpt_base:
+        _sweep_dead_checkpoints(ckpt_base)
+        ckpt = f"{ckpt_base}/{os.getpid()}-{name}-{uuid.uuid4().hex}"
+        writer = writer.option("checkpointLocation", ckpt)
     try:
-        writer = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-        )
-        if ckpt_base:
-            ckpt = f"{ckpt_base}/{name}_{uuid.uuid4().hex}"
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        with session_conf(
+            spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
+        ):
+            q = writer.start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         if ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
     return spark.sql(f"SELECT * FROM {name}")

@@ -408,15 +408,15 @@ def test_srp_wide_signatures_and_adaptive_bands(spark):
     rows = [(i, base[i % 40].tolist()) for i in range(80)]  # each vec twice
     df = spark.createDataFrame(rows, "vid long, vec array<double>")
 
-    top1 = S.srp_knn_join(df, "vec", "vid", k=1, n_bits=120, band_bits=15)
+    top1 = S.srp_knn_join(df, "vec", "vid", k=1, band_bits=15)
     got = {r["vid"]: (r["nn_id"], r["cosine"]) for r in top1.collect()}
     assert len(got) == 80
     for vid, (nn, cos) in got.items():
         assert abs(cos - 1.0) < 1e-12  # its clone is an exact-cosine match
         assert nn % 40 == vid % 40
 
-    sigs = S.srp_signatures_wide(df, "vec", "vid", 120)
-    pairs = S.srp_band_pairs_wide(sigs, "vid", 120, 15)
+    sigs = S.srp_signatures(df, "vec", "vid", 120)
+    pairs = S.srp_band_pairs(sigs, "vid", 120, 15)
     clone_pairs = {(r["a"], r["b"]) for r in pairs.collect() if r["hamming"] == 0}
     for i in range(40):
         assert (i, i + 40) in clone_pairs
@@ -580,14 +580,14 @@ def test_srp_band_pairs_uncapped_matches_capped(spark):
         for r in S.srp_band_pairs(sigs, "vid", 60, 10, max_bucket=None).collect()
     )
     assert capped == uncapped and uncapped
-    sigs_w = S.srp_signatures_wide(df, "vec", "vid", 120)
+    sigs_w = S.srp_signatures(df, "vec", "vid", 120)
     cw = set(
         (r["a"], r["b"]) for r in
-        S.srp_band_pairs_wide(sigs_w, "vid", 120, 15, max_bucket=10**6).collect()
+        S.srp_band_pairs(sigs_w, "vid", 120, 15, max_bucket=10**6).collect()
     )
     uw = set(
         (r["a"], r["b"]) for r in
-        S.srp_band_pairs_wide(sigs_w, "vid", 120, 15, max_bucket=None).collect()
+        S.srp_band_pairs(sigs_w, "vid", 120, 15, max_bucket=None).collect()
     )
     assert cw == uw
 

@@ -176,3 +176,33 @@ def test_stream_static_enrichment_matches_batch(spark, sf_smoke):
         for r in batch.collect()
     }
     assert got == want and len(want) > 0
+
+
+def test_replay_sweeps_dead_process_checkpoints_only(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """A replay removes checkpoint dirs left by dead processes under the
+    checkpoint base, keeps a live process's dirs, and removes its own."""
+    import os
+    import subprocess
+    import sys
+
+    finished = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    dead_pid = int(finished.stdout)
+    dead = tmp_path / f"{dead_pid}-t_leaked-0123456789abcdef"
+    live = tmp_path / f"{os.getpid()}-t_running-fedcba9876543210"
+    for d in (dead, live):
+        (d / "offsets").mkdir(parents=True)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_DIR", str(tmp_path))
+
+    stream = jobs.read_event_stream(spark, sf_smoke)
+    out = jobs.run_to_completion(
+        jobs.hourly_rollup_stream(stream), "t_sweep", "complete"
+    )
+    assert out.count() > 0
+    assert sorted(p.name for p in tmp_path.iterdir()) == [live.name]
