@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.materialize import memo, pinned
+from ..plans.materialize import local_frame, memo, pinned
 from .text import content_hash, normalize_text, shingles, tokens
 
 
@@ -113,7 +113,7 @@ def minhash_band_pairs(
     pipeline runs once just to read an array length), so the probe is
     only a back-compat path for callers that genuinely don't know.
 
-    ``key`` (r12): callers whose ``signatures`` are themselves a
+    ``key``: callers whose ``signatures`` are themselves a
     memoized per-corpus table pass its memo key, and the BANDED table
     (docs × bands rows of three scalars — the per-call xxhash64 + 128
     long→string casts per doc were the dominant residual cost of the
@@ -123,7 +123,7 @@ def minhash_band_pairs(
     if num_hashes is None:
         first = signatures.select(F.size("signature").alias("n")).first()
         if first is None:  # empty corpus
-            return signatures.sparkSession.createDataFrame([], "a long, b long")
+            return local_frame(signatures.sparkSession, [], "a long, b long")
         num_hashes = first["n"]
     width = num_hashes // bands
     # band structs as one JVM-parsed expression (see minhash_signatures:
@@ -358,7 +358,8 @@ def connected_components(
                 parent[hi] = lo
         nodes = {r["a"] for r in rows} | {r["b"] for r in rows}
         labels = [(n, find(n)) for n in sorted(nodes)]
-        return edges.sparkSession.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             labels, "node long, component long"
         )
     sym = (

@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.materialize import local_frame
+
 
 class KdeNaiveBayesModel:
     """Fitted kernel NB: broadcastable grids + priors.
@@ -169,7 +171,8 @@ def fit_kde_naive_bayes(
         lo, hi = mn - cut * bw, mx + cut * bw
         step = (hi - lo) / (grid_points - 1)
         grid_rows.append((c, f_, float(n), bw, lo, step))
-    gmeta = spark.createDataFrame(
+    gmeta = local_frame(
+        spark,
         grid_rows, "_cls string, _feat string, n double, bw double, lo double, step double"
     )
     counts = melted.groupBy("_cls", "_feat", "_v").agg(

@@ -10,6 +10,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.materialize import local_frame
+
 
 def group_count(df: DataFrame, *cols: str, sort: bool = True) -> DataFrame:
     """A1: ``count(brand, sort=TRUE)`` (BigDataProject.R:151-152)."""
@@ -137,7 +139,8 @@ def corr_matrix(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 
     spark = df.sparkSession
     data = [(a, *[corr(a, b) for b in cols]) for a in cols]
-    return spark.createDataFrame(data, ["column", *cols])
+    ddl = ", ".join(["`column` string", *[f"`{c}` double" for c in cols]])
+    return local_frame(spark, data, ddl)
 
 
 def crosstab_counts(df: DataFrame, row_col: str, col_col: str) -> DataFrame:
@@ -176,7 +179,7 @@ def exact_percentiles_distributed(
 ) -> DataFrame:
     """Type-7 exact percentiles WITHOUT the single-buffer aggregate:
     Spark's ``percentile`` (and DuckDB's ``quantile_cont``) buffer every
-    value of the group in one aggregation buffer — fine at bench SF,
+    value of the group in one aggregation buffer — fine at small SF,
     fatal for a global percentile over a 100 TB column. This form is
     fully distributed: value-compressed counts (one hash aggregate),
     a range-partitioned two-pass cumulative (no global single-task
@@ -187,7 +190,7 @@ def exact_percentiles_distributed(
     Returns one row per prob: (p, value) — plus a constant ``n`` column
     (non-null value count, 0 when empty) when ``with_n=True``, so
     callers that also report the count don't re-evaluate the input with
-    a separate ``count()`` plan (r11: that sibling aggregate was a full
+    a separate ``count()`` plan (that sibling aggregate would be a full
     second evaluation of arbitrarily expensive upstreams, e.g. the
     Theil-Sen pair join).
 
@@ -196,7 +199,7 @@ def exact_percentiles_distributed(
     ``distributed_exact_quantiles_check`` oracle query and the
     equivalence test in tests/test_operators.py).
 
-    ``compress_values=False`` (r12) skips the value-compression
+    ``compress_values=False`` skips the value-compression
     groupBy: callers whose value domain is ~unique (Theil-Sen's
     pairwise slopes — ratios of distinct integer pairs) pay a full
     hash-aggregate exchange that compresses nothing; the cumulative
@@ -218,12 +221,11 @@ def exact_percentiles_distributed(
         counts, ["v"], ["c"], with_part=True
     )
     cum = cum0.select("v", F.col("cum_c").alias("cum"))
-    # n = one flat aggregate over the PINNED partitioned counts; the
-    # previous ``counts.agg(sum(c))`` was a SEPARATE plan that
-    # re-evaluated the whole upstream (guide §1.2/§2.4: don't compute
-    # the same pass twice). Identical value and NULL-on-empty parity.
+    # n = one flat aggregate over the PINNED partitioned counts, not a
+    # separate ``counts.agg(sum(c))`` plan that would re-evaluate the
+    # whole upstream. Identical value and NULL-on-empty parity.
     n = part.agg(F.sum("c").cast("long").alias("n"))
-    p_df = spark.createDataFrame([(float(p),) for p in probs], "p double")
+    p_df = local_frame(spark, [(float(p),) for p in probs], "p double")
     # h = (n-1)*p in double, exactly as Percentile/quantile_cont compute
     idx = p_df.crossJoin(F.broadcast(n)).select(
         "p",
@@ -276,8 +278,8 @@ def exact_percentiles_distributed_grouped(
     ``exact_percentiles_distributed`` for high-cardinality or SKEWED
     groups. A ``Window.partitionBy(group)`` cumulative serializes each
     group into one task, so a 50%-of-rows group becomes a straggler
-    (round-6 skew probe measured 1.4× at sf0.1 with the window form;
-    the ratio grows with data). Instead: one GLOBAL range-partitioned
+    (a skew probe measured 1.4× at sf0.1 with the window form; the
+    ratio grows with data). Instead: one GLOBAL range-partitioned
     cumulative over (group, value) order — parallel WITHIN the big
     group — minus each group's exclusive offset (a second, bounded
     range cumulative over the per-group totals) gives the intra-group
@@ -292,7 +294,7 @@ def exact_percentiles_distributed_grouped(
     ).filter(F.col("v").isNotNull())
     # counts is consumed by TWO independent plans (the (g,v) cumulative
     # and the per-group totals) — pin it so the arbitrarily expensive
-    # upstream is evaluated once, not twice (r11, guide §1.2). Memory is
+    # upstream is evaluated once, not twice. Memory is
     # bounded by the distinct-(group,value) domain — the same class the
     # cumulative's internal pin already holds; LRU keeps 4 generations.
     counts = pinned_lru(
@@ -313,7 +315,7 @@ def exact_percentiles_distributed_grouped(
     cum = gcum.join(off, "g").select(
         "g", "v", (F.col("gcum") - F.col("off")).alias("cum"), "n"
     )
-    p_df = spark.createDataFrame([(float(p),) for p in probs], "p double")
+    p_df = local_frame(spark, [(float(p),) for p in probs], "p double")
     j = cum.join(F.broadcast(p_df))
     h = (F.col("n") - 1) * F.col("p")
     j = j.select(

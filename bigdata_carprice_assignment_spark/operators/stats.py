@@ -20,6 +20,7 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.materialize import local_frame
 from . import stats_math as sm
 
 
@@ -50,7 +51,8 @@ def welch_ttest(
         se2a**2 / (a["n"] - 1) + se2b**2 / (b["n"] - 1)
     )  # Welch–Satterthwaite
     p = sm.t_test_p_two_sided(t, dof)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 g1,
@@ -82,7 +84,8 @@ def oneway_anova(df: DataFrame, value: str, group: str) -> DataFrame:
     df1, df2 = k - 1, n - k
     f = (ssb / df1) / (ssw / df2)
     p = sm.f_sf(f, df1, df2)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(k, n, float(ssb), float(ssw), df1, df2, float(f), float(p))],
         "k long, n long, ss_between double, ss_within double, df1 long, "
         "df2 long, f_stat double, p_value double",
@@ -138,7 +141,8 @@ def oneway_anova_multi(
         df1, df2 = k - 1, n - k
         f = (ssb / df1) / (ssw / df2)
         out.append((feat, k, n, df1, df2, float(f), float(sm.f_sf(f, df1, df2))))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "feature string, k long, n long, df1 long, df2 long, "
         "f_stat double, p_value double",
@@ -163,7 +167,8 @@ def tukey_hsd(df: DataFrame, value: str, group: str) -> DataFrame:
         out.append(
             (a[group], b[group], float(diff), float(se), float(q), float(p_adj))
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "group1 string, group2 string, diff double, se double, "
         "q_stat double, p_adj double",
@@ -176,7 +181,8 @@ def pearson_corr_test(df: DataFrame, x: str, y: str) -> DataFrame:
     r, n = df.agg(F.corr(x, y), F.count(F.lit(1))).first()
     t = r * math.sqrt((n - 2) / (1 - r * r))
     p = sm.t_test_p_two_sided(t, n - 2)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(float(r), int(n), float(t), float(n - 2), float(p))],
         "r double, n long, t_stat double, df double, p_value double",
     )
@@ -203,7 +209,8 @@ def chi2_independence(df: DataFrame, a: str, b: str) -> DataFrame:
     dof = (len(row_tot) - 1) * (len(col_tot) - 1)
     p = sm.chi2_sf(chi2, dof)
     cramers_v = math.sqrt(chi2 / (n * min(len(row_tot) - 1, len(col_tot) - 1)))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(float(chi2), int(dof), float(p), float(cramers_v), int(n))],
         "chi2 double, df long, p_value double, cramers_v double, n long",
     )

@@ -1,10 +1,10 @@
 """Materialization barriers with an explicit lifecycle.
 
 ``DataFrame.localCheckpoint`` truncates lineage and pins RDD blocks
-until the JVM garbage-collects the RDD — on a long-lived session (bench
-warm runs, any shared cluster app) repeated index builds accumulate
-blocks, and each run gets slower (round-2 bench: the ANN queries' warm
-runs were 1.5× their cold time). :func:`pinned` uses ``persist``
+until the JVM garbage-collects the RDD — on a long-lived session (warm
+benchmark passes, any shared cluster app) repeated index builds
+accumulate blocks, and each run gets slower (the ANN queries' warm runs
+measured 1.5× their cold time). :func:`pinned` uses ``persist``
 instead: the plan stays recomputable, so unpersisting is always safe,
 and each named pool frees its previous generation the moment a new
 build starts — steady-state block usage is one generation per pool.
@@ -13,6 +13,11 @@ build starts — steady-state block usage is one generation per pool.
 built from immutable inputs (shingles, signatures, feature vectors,
 indexes, corpus statistics) is built once per (session, key) and served
 to every later query of that session.
+
+:func:`collect_small` and :func:`local_frame` carry a handful of rows
+to the driver and back: a grouped result capped at a known row count is
+collected, finished in plain Python, and returned as a ``LocalRelation``
+that Spark collects without running a job.
 """
 
 from __future__ import annotations
@@ -20,9 +25,9 @@ from __future__ import annotations
 import itertools
 import logging
 from collections import deque
-from collections.abc import Callable, Hashable
+from collections.abc import Callable, Hashable, Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 _LOG = logging.getLogger(__name__)
 
@@ -135,3 +140,42 @@ def memo(spark: SparkSession, key: tuple, build: Callable[[], object]):
         return pinned(value, key)
     _POOLS[key] = (spark, value)
     return value
+
+
+def collect_small(df: DataFrame, cap: int) -> list[Row]:
+    """Collect ``df``, which must have at most ``cap`` rows.
+
+    Runs ``df.limit(cap + 1).collect()`` and raises ``ValueError`` when
+    more than ``cap`` rows come back, so a result that grew with the
+    data fails loudly instead of turning into a data-sized collect.
+    ``cap`` bounds the grouped domain (e.g. the cells of a contingency
+    table over two low-cardinality columns)."""
+    rows = df.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(f"collect_small: more than {cap} rows")
+    return rows
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], ddl_schema: str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in schema order),
+    typed by ``ddl_schema`` (e.g. ``"k long, v double"``).
+
+    The rows travel as an Arrow table, so the plan is a
+    ``LocalRelation``: collecting it, or a projection on it (Catalyst
+    folds the projection into the relation), runs no Spark job and
+    starts no Python worker. A Python list handed to
+    ``createDataFrame`` instead becomes an RDD whose collect is a job.
+    ``None`` is NULL and ``float("nan")`` stays NaN; naive datetimes
+    are read as UTC, the session zone ``get_spark`` pins."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl_schema)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..llm import text as TX
+from ..plans.materialize import local_frame
 from ..registry import query
 from ..sources.readers import load_table
 
@@ -1006,7 +1007,7 @@ def bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..plans.materialize import memo
 
-    # Memoized initial vocabulary (r11): the corpus-sized explode +
+    # Memoized initial vocabulary: the corpus-sized explode +
     # groupBy is the only fact-scale pass in BPE training and is
     # identical every call — the merge rounds never touch the corpus
     # again, so the round loop starts from the memoized frame.
@@ -1059,7 +1060,8 @@ def bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(f"[{best['a']}{best['b']}]"),
             ),
         ).localCheckpoint()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "merge_round int, token_a string, token_b string,"
         " merged string, pair_count long",

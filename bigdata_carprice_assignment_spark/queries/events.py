@@ -9,6 +9,8 @@ pinned UTC; DuckDB timestamps are tz-naive) so hashes are portable.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1502,53 +1504,60 @@ def event_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     next (the sequence-predictability readout on top of
     event_transition_counts; ~0 means the journey is memoryless and a
     sequence model buys nothing). Every probability is a ratio of exact
-    transition counts; log2 terms are IEEE-deterministic; the folds run
-    over the |types|^2 transition matrix.
+    transition counts; log2 terms are IEEE-deterministic; the sums are
+    ``math.fsum`` over the |types|^2 transition cells, so cell order
+    cannot move a bit.
 
     Scale: the lag window is (user)-partitioned; one grouped count to
-    the transition matrix; everything after is k^2-row arithmetic."""
+    the transition cells, which are collected under a row cap and
+    finished on the driver; the one-row result is a local relation
+    rounded by Spark."""
+    # imported per call: the scale gate in tests/test_plans.py patches
+    # collect_small to see the plans of the frames it collects
+    from ..plans.materialize import collect_small, local_frame
+
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "event_type", F.lag("event_type").over(w).alias("prev")
     ).filter(F.col("prev").isNotNull())
-    t = seq.groupBy("prev", "event_type").agg(F.count(F.lit(1)).alias("c"))
-    from ..plans.materialize import pinned
+    cells = collect_small(
+        seq.groupBy("prev", "event_type").agg(F.count(F.lit(1)).alias("c")),
+        cap=4096,
+    )
+    out = local_frame(
+        spark,
+        [_conditional_entropy([(r["prev"], r["c"]) for r in cells])],
+        "n_transitions long, h_marginal_bits double, h_cond_bits double",
+    ).select(
+        "n_transitions",
+        F.round("h_marginal_bits", 6).alias("h_marginal_bits"),
+        F.round("h_cond_bits", 6).alias("h_cond_bits"),
+    )
+    return out.select(
+        "*",
+        F.round(F.col("h_marginal_bits") - F.col("h_cond_bits"), 6).alias(
+            "information_rate_bits"
+        ),
+    )
 
-    t = pinned(t, "markov_cells")  # consumed by joint, marginal, total
-    mp = t.groupBy("prev").agg(F.sum("c").cast("long").alias("cp"))
-    tot = t.agg(F.sum("c").cast("long").alias("n"))
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    ln2 = F.log(F.lit(2.0))
-    hc = (
-        t.join(F.broadcast(mp), "prev")
-        .crossJoin(F.broadcast(tot))
-        .agg(
-            F.round(
-                -F.sum((d("c") / F.col("n")) * F.log(d("c") / F.col("cp")) / ln2),
-                6,
-            ).alias("h_cond_bits")
-        )
+
+def _conditional_entropy(cells: list[tuple]) -> tuple:
+    """``(n, H(prev), H(next | prev))`` in bits from ``(prev, count)``
+    transition cells; all ``None`` when there are none, like the
+    oracle's ungrouped aggregates over an empty table."""
+    if not cells:
+        return (None, None, None)
+    cp: dict = {}
+    for prev, c in cells:
+        cp[prev] = cp.get(prev, 0) + c
+    n = sum(cp.values())
+    fn, ln2 = float(n), math.log(2.0)
+    h_cond = -math.fsum(
+        (c / fn) * math.log(c / cp[prev]) / ln2 for prev, c in cells
     )
-    hm = mp.crossJoin(F.broadcast(tot)).agg(
-        F.round(
-            -F.sum((d("cp") / F.col("n")) * F.log(d("cp") / F.col("n")) / ln2),
-            6,
-        ).alias("h_marginal_bits")
-    )
-    return (
-        tot.select(F.col("n").alias("n_transitions"))
-        .crossJoin(F.broadcast(hm))
-        .crossJoin(F.broadcast(hc))
-        .select(
-            "n_transitions",
-            "h_marginal_bits",
-            "h_cond_bits",
-            F.round(
-                F.col("h_marginal_bits") - F.col("h_cond_bits"), 6
-            ).alias("information_rate_bits"),
-        )
-    )
+    h_marg = -math.fsum((v / fn) * math.log(v / fn) / ln2 for v in cp.values())
+    return (n, h_marg, h_cond)
 
 
 @query(

@@ -13,7 +13,7 @@ from ..llm import dedup as D
 from ..llm import multimodal as MM
 from ..llm import similarity as S
 from ..llm import text as TX
-from ..plans.materialize import memo, pinned, pool_get
+from ..plans.materialize import local_frame, memo, pinned, pool_get
 from ..registry import query
 from ..sources.readers import load_table
 
@@ -279,11 +279,10 @@ def minhash_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus for nothing. n_near_duplicates = labeled nodes that are not
     their own component root; n_canonical = n_docs − that.
 
-    r11b: the verified t=0.6 pair set is POOLED per (session, corpus)
-    like its t=0.8 sibling (``_verified_minhash_pairs_08``) — banding +
+    The verified t=0.6 pair set is memoized per (session, corpus) like
+    its t=0.8 sibling (``_verified_minhash_pairs_08``): banding +
     exact-Jaccard verify is a corpus-keyed dedup index over immutable
-    parquet, and the previous per-call ``pinned`` (no memo) rebuilt it
-    on every warm run."""
+    parquet, so later calls reuse it instead of rebuilding it."""
     docs = load_table(spark, sf_dir, "documents")
 
     def build() -> DataFrame:
@@ -309,7 +308,8 @@ def minhash_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("node") != F.col("component")).cast("long")).alias("d")
     ).first()
     n_dup = int(dup["d"] or 0)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_docs, n_dup, n_docs - n_dup)],
         "n_docs long, n_near_duplicates long, n_canonical long",
     )

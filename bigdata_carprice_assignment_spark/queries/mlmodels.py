@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..llm import text as TX
 from ..ml import pipelines as mlp
+from ..plans.materialize import local_frame
 from ..registry import query
 from ..sources.readers import load_table
 
@@ -48,7 +49,8 @@ def order_value_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFram
         )
         m = mlp.regression_metrics_dollars(model, test, label="log_totalprice")
         rows.append((kind, round(m["rmse"], 2), round(m["r2"], 4), round(m["mae"], 2)))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "model string, rmse_dollars double, r2 double, mae_dollars double"
     )
 
@@ -85,7 +87,8 @@ def tuned_nonlinear_regressor_metrics(spark: SparkSession, sf_dir: str) -> DataF
     )
     m = mlp.regression_metrics_dollars(model, test, label="log_totalprice")
     gbt = model.stages[-1]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 "tuned_gbt",
@@ -129,7 +132,7 @@ def embeddings_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M9 elbow on embeddings, k ∈ {2,4,6,8,10,12}, cached features."""
     feats = _embedding_features(spark, sf_dir)
     wss = mlp.kmeans_elbow(feats, [2, 4, 6, 8, 10, 12], seed=123)
-    return spark.createDataFrame([(k, round(v, 4)) for k, v in wss], "k int, wss double")
+    return local_frame(spark, [(k, round(v, 4)) for k, v in wss], "k int, wss double")
 
 
 @query("embeddings_pca_variance")
@@ -139,7 +142,8 @@ def embeddings_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feats = _embedding_features(spark, sf_dir)
     model = PCA(k=4, inputCol="features", outputCol="pca").fit(feats)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, round(float(v), 6)) for i, v in enumerate(model.explainedVariance)],
         "component int, explained_variance double",
     )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import bucket_label_col, first_word
 from ..operators import aggregates as agg
 from ..operators import cleaning, joins, topk
+from ..plans.materialize import local_frame
 from ..registry import query
 from ..sources.readers import load_table
 
@@ -821,7 +822,8 @@ def approx_vs_exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             round(1.0 - float(agree), 6),
         ),
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         data, "statistic string, exact double, approx double, rel_error double"
     )
 
@@ -882,7 +884,8 @@ def lineitem_profile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for c in cols
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(data),
         "col_name string, n long, mean double, stddev double, min double, max double",
     )

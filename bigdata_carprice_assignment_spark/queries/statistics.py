@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import stats
+from ..plans.materialize import local_frame
 from ..registry import query
 from ..sources.readers import load_table
 
@@ -264,7 +265,8 @@ def hypothesis_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("pearson_qty_extendedprice", rp["t_stat"], rp["p_value"]),
         ("chi2_returnflag_linestatus", rc["chi2"], rc["p_value"]),
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, float(s), float(p), bool(p < 0.05)) for n, s, p in rows],
         "test string, statistic double, p_value double, reject_at_5pct boolean",
     )
@@ -740,45 +742,61 @@ def flag_status_mutual_information(spark: SparkSession, sf_dir: str) -> DataFram
     status) with the marginal entropies — the dependence measure that
     sees what chi-squared's linear statistic can't. Every probability
     is a ratio of exact integer counts (identical in both engines), the
-    per-cell log terms are IEEE-deterministic, and the final sums run
-    over ≤|A|x|B| cells — 6dp cannot drift. Marginal entropies fold
-    from the marginal tables (never a DISTINCT over joined terms, which
+    per-cell log terms are IEEE-deterministic, and the sums are
+    ``math.fsum`` over ≤|A|x|B| cells — correctly rounded, so a sum
+    and its 6dp rounding do not depend on cell order. Marginal entropies fold
+    from the marginal counts (never a DISTINCT over joined terms, which
     would silently collapse coincidentally-equal probabilities).
 
     Scale: one hash aggregate to the contingency cells (map-side
-    combined), then arithmetic on a k-row frame; the marginals come
-    from the cells, never from a second pass over the fact."""
-    li = load_table(spark, sf_dir, "lineitem")
-    j = li.groupBy(
-        F.col("l_returnflag").alias("a"), F.col("l_linestatus").alias("b")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    from ..plans.materialize import pinned
+    combined); the cells are collected under a row cap and finished on
+    the driver, and the one-row result is a local relation rounded by
+    Spark. The marginals come from the cells, never from a second pass
+    over the fact."""
+    # imported per call: the scale gate in tests/test_plans.py patches
+    # collect_small to see the plans of the frames it collects
+    from ..plans.materialize import collect_small
 
-    j = pinned(j, "mi_cells")  # referenced by joint + both marginals
-    tot = j.agg(F.sum("c").cast("long").alias("n"))
-    ma = j.groupBy("a").agg(F.sum("c").cast("long").alias("ca"))
-    mb = j.groupBy("b").agg(F.sum("c").cast("long").alias("cb"))
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    joined = (
-        j.join(F.broadcast(ma), "a")
-        .join(F.broadcast(mb), "b")
-        .crossJoin(F.broadcast(tot))
+    li = load_table(spark, sf_dir, "lineitem")
+    cells = collect_small(
+        li.groupBy(
+            F.col("l_returnflag").alias("a"), F.col("l_linestatus").alias("b")
+        ).agg(F.count(F.lit(1)).alias("c")),
+        cap=4096,
     )
-    pc, pa, pb = d("c") / d("n"), d("ca") / d("n"), d("cb") / d("n")
-    mi = joined.groupBy("n").agg(
-        F.round(F.sum(pc * F.log(pc / (pa * pb))), 6).alias("mi_nats")
+    out = local_frame(
+        spark,
+        _mutual_information([(r["a"], r["b"], r["c"]) for r in cells]),
+        "n long, mi_nats double, h_returnflag double, h_linestatus double",
     )
-    ha = ma.crossJoin(F.broadcast(tot)).agg(
-        F.round(-F.sum(pa * F.log(pa)), 6).alias("h_returnflag")
+    return out.select(
+        "n", *[F.round(c, 6).alias(c) for c in out.columns[1:]]
     )
-    hb = mb.crossJoin(F.broadcast(tot)).agg(
-        F.round(-F.sum(pb * F.log(pb)), 6).alias("h_linestatus")
+
+
+def _mutual_information(cells: list[tuple]) -> list[tuple]:
+    """``[(n, mi, h_a, h_b)]`` in nats from ``(a, b, count)`` cells, or
+    ``[]`` when no cell has two non-NULL keys. The oracle's SQL shape
+    is kept: NULL keys count in ``n`` and in their marginal entropy but
+    join no marginal in the MI sum, and the MI row is a ``GROUP BY n``
+    over the joined cells, so it has no row when none joined."""
+    ca: dict = {}
+    cb: dict = {}
+    for a, b, c in cells:
+        ca[a] = ca.get(a, 0) + c
+        cb[b] = cb.get(b, 0) + c
+    joined = [(a, b, c) for a, b, c in cells if a is not None and b is not None]
+    if not joined:
+        return []
+    n = sum(ca.values())
+    fn = float(n)
+    mi = math.fsum(
+        (c / fn) * math.log((c / fn) / ((ca[a] / fn) * (cb[b] / fn)))
+        for a, b, c in joined
     )
-    return (
-        mi.crossJoin(F.broadcast(ha))
-        .crossJoin(F.broadcast(hb))
-        .select("n", "mi_nats", "h_returnflag", "h_linestatus")
-    )
+    h_a = -math.fsum((v / fn) * math.log(v / fn) for v in ca.values())
+    h_b = -math.fsum((v / fn) * math.log(v / fn) for v in cb.values())
+    return [(n, mi, h_a, h_b)]
 
 
 @query(
@@ -1498,9 +1516,9 @@ def kaplan_meier_second_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = orders.agg(
         F.max(F.to_date(F.date_trunc("day", "o_orderdate"))).alias("mxd")
     )
-    # r12: ONE window pass. The old shape filtered ``r`` twice (rn=1 /
-    # rn=2) and joined the halves — two full evaluations of the rank
-    # window plus a join (guide §1.2/§2.4). A groupBy on the window's
+    # ONE window pass: filtering ``r`` twice (rn=1 / rn=2) and joining
+    # the halves would evaluate the rank window twice plus a join. A
+    # groupBy on the window's
     # own partition key folds both dates out of one pass and reuses the
     # window's exchange outright: fd = d at rn=1 (exactly one row per
     # customer), sd = d at rn=2 (at most one row — min(when) IS the
@@ -1545,7 +1563,8 @@ def kaplan_meier_second_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1.0) - F.col("deaths").cast("double") / F.col("n_risk")
         ).alias("lnf"),
     )
-    horizons = spark.createDataFrame(
+    horizons = local_frame(
+        spark,
         [(h,) for h in (7, 14, 30, 60, 90)], "horizon long"
     )
     at_risk = horizons.join(F.broadcast(byd)).groupBy("horizon").agg(
@@ -3399,7 +3418,8 @@ def gaussian_mixture_em_order_values(
             (sxx_ - srxx) / (nn - sr)
             - ((sx_ - srx) / (nn - sr)) * ((sx_ - srx) / (nn - sr)),
         ]
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [tuple(theta)],
         "weight_1 double, mean_1 double, var_1 double,"
         " mean_2 double, var_2 double",

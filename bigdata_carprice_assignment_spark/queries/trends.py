@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.materialize import local_frame
 from ..registry import query
 from ..sources.readers import load_table
 
@@ -2231,7 +2232,8 @@ def poisson_glm_daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(mu * F.col("x2") * F.col("x2")).alias("hf"),
         ).collect()[0].asDict()
         beta = _pois_solve(row, beta)
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [
             ("(intercept)", beta[0]),
             ("day_index_per_1000", beta[1]),
@@ -3658,7 +3660,8 @@ def copurchase_kcore_peel_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     trace = kcore_peel_trace(
         e, k=_KCORE_K, rounds=_KCORE_ROUNDS, key=("copurchase_edges", sf_dir)
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         trace, "round long, n_nodes long, n_edges long"
     ).orderBy("round")
 
@@ -3727,7 +3730,7 @@ def copurchase_bfs_hop_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     trace = bfs_hop_counts(
         e, seeds, hops=_BFS_HOPS, key=("copurchase_edges", sf_dir)
     )
-    return spark.createDataFrame(trace, "hop long, n_new long").orderBy("hop")
+    return local_frame(spark, trace, "hop long, n_new long").orderBy("hop")
 
 
 @query(

@@ -5,6 +5,14 @@ design target — 100 TB on ~1000 executors) is reached by the same code:
 every knob here is safe to override via ``spark-submit --conf`` and no
 operator in this package assumes single-JVM execution (no ``collect()``
 on data-sized results, no driver-side loops over rows).
+
+``plans.materialize.collect_small`` is the one sanctioned small driver
+collect: it brings a grouped result of at most ``cap`` rows (contingency
+cells, per-group sufficient statistics) to the driver and raises above
+the cap, so it can never become a data-sized collect. A finisher then
+computes the statistic in Python and returns it through
+``plans.materialize.local_frame``, a ``LocalRelation`` whose collect
+runs no Spark job.
 """
 
 from __future__ import annotations

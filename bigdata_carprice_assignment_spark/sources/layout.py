@@ -20,6 +20,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.materialize import local_frame
+
 
 def _minmax_scaled(col: str, lo: float, hi: float, bits: int) -> Column:
     """Linear-scale the column into [0, 2^bits) given its min/max (one
@@ -106,7 +108,8 @@ def write_corpus_stats(df: DataFrame, path: str, vec_col: str) -> dict:
         .first()
     )
     stats = {"n_docs": row["n_docs"], "n_distinct": row["n_distinct"]}
-    df.sparkSession.createDataFrame(
+    local_frame(
+        df.sparkSession,
         [(vec_col, stats["n_docs"], stats["n_distinct"])],
         "vec_col string, n_docs long, n_distinct long",
     ).coalesce(1).write.mode("overwrite").parquet(path)

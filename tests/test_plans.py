@@ -5,6 +5,9 @@ regresses the plan even when results stay correct."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_carprice_assignment_spark.plans import explain as X
@@ -191,36 +194,86 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark, sf_smoke):
         )
 
 
-def test_no_partitionless_windows_in_registered_queries(spark, sf_smoke):
+@pytest.fixture
+def collected_frames(monkeypatch) -> list:
+    """Records every frame handed to ``collect_small`` during the test."""
+    from bigdata_carprice_assignment_spark.plans import materialize
+
+    frames: list = []
+    real = materialize.collect_small
+
+    def recording(df, cap):
+        frames.append(df)
+        return real(df, cap)
+
+    monkeypatch.setattr(materialize, "collect_small", recording)
+    return frames
+
+
+def _window_specs(spark, sf_dir, name, collected_frames) -> list[str]:
+    """First argument of every ``windowspecdefinition`` in the ANALYZED
+    plans a registered query builds: the plan it returns, plus every
+    frame it hands to ``collect_small``. A driver-finished query returns
+    a LocalRelation, so its upstream windows only show in the frames it
+    collected."""
+    from bigdata_carprice_assignment_spark import registry
+
+    collected_frames.clear()
+    df = registry.QUERIES[name](spark, sf_dir)
+    return [
+        m.group(1)
+        for frame in (df, *collected_frames)
+        for m in re.finditer(
+            r"windowspecdefinition\(([^,]*),",
+            frame._jdf.queryExecution().analyzed().toString(),
+        )
+    ]
+
+
+def _is_partitionless(first_arg: str) -> bool:
+    # Partitionless = first arg is a sort spec (orderBy with no
+    # partition) OR the frame itself (empty `OVER ()` spec: a
+    # `min(...) OVER ()` runs as a single-task WindowExec just like the
+    # ordered variant).
+    return bool(re.search(r"(ASC NULLS|DESC NULLS)", first_arg)) or (
+        "specifiedwindowframe" in first_arg
+    )
+
+
+def test_no_partitionless_windows_in_registered_queries(spark, sf_smoke, collected_frames):
     """Scale gate: every window in EVERY registered query (oracle-backed
     and rows-only alike) declares a partition spec. A partitionless ``Window.orderBy`` funnels
-    the whole input through ONE task — the round-2 scale-killers (global
-    ntile, pooled-rank, ECDF cumsum) are now range-partitioned two-pass
-    cumsums. Deliberate bounded single-partition windows (offsets over a
+    the whole input through ONE task — global ntile, pooled rank and
+    ECDF cumsum are range-partitioned two-pass cumsums instead.
+    Deliberate bounded single-partition windows (offsets over a
     num_ranges-row aggregate, a LIMIT-k candidate frame) are marked in
     code with ``partitionBy(F.lit(0))``, which the analyzed plan shows as
     a constant partition key — so this gate scans the ANALYZED plan,
-    where the convention is visible before constant folding erases it."""
-    import re
-
+    where the convention is visible before constant folding erases it.
+    Frames a query collects through ``collect_small`` are scanned too."""
     from bigdata_carprice_assignment_spark import registry
 
     registry.load_all()
-    offenders: list[str] = []
-    for name in sorted(registry.QUERIES):
-        df = registry.QUERIES[name](spark, sf_smoke)
-        txt = df._jdf.queryExecution().analyzed().toString()
-        for m in re.finditer(r"windowspecdefinition\(([^,]*),", txt):
-            first_arg = m.group(1)
-            # Partitionless = first arg is a sort spec (orderBy with no
-            # partition) OR the frame itself (empty `OVER ()` spec —
-            # caught live in r5: `min(...) OVER ()` runs as a
-            # single-task WindowExec just like the ordered variant).
-            if re.search(r"(ASC NULLS|DESC NULLS)", first_arg) or (
-                "specifiedwindowframe" in first_arg
-            ):
-                offenders.append(f"{name}: windowspecdefinition({first_arg}, ...")
+    offenders = [
+        f"{name}: windowspecdefinition({first_arg}, ..."
+        for name in sorted(registry.QUERIES)
+        for first_arg in _window_specs(spark, sf_smoke, name, collected_frames)
+        if _is_partitionless(first_arg)
+    ]
     assert not offenders, "\n".join(offenders)
+
+
+def test_scale_gate_sees_driver_finished_windows(spark, sf_smoke, collected_frames):
+    """``event_conditional_entropy`` returns a LocalRelation; the gate
+    still sees the (user)-partitioned lag window of the cells it
+    collected on the driver."""
+    from bigdata_carprice_assignment_spark import registry
+
+    registry.load_all()
+    specs = _window_specs(spark, sf_smoke, "event_conditional_entropy", collected_frames)
+    assert specs, "the lag window is not visible to the scale gate"
+    assert not [s for s in specs if _is_partitionless(s)], specs
+    assert any("user_id" in s for s in specs), specs
 
 
 def test_partitioned_roundtrip_query_prunes(spark, sf_smoke):
