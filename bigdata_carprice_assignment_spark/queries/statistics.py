@@ -1,11 +1,15 @@
 """Statistical-test queries (SURVEY.md §2.7).
 
-Two tiers per test:
-- ``*_components`` — the SQL-expressible part (group stats → statistic,
-  df) computed fully inside Spark SQL expressions, with a DuckDB oracle.
-- ``hypothesis_suite`` — the full operator outputs including p-values
-  (driver-side special-function math; no SQL equivalent → rows-only
-  check; unit tests pin the p-values against published table values).
+Each hypothesis test has one finisher in ``operators/stats.py``: a
+pure-Python function over the group moments or contingency cells that
+one Spark aggregation reads. Two kinds of query run it:
+- ``*_components`` — the SQL-expressible part (statistic, df) of the
+  finisher's output, as a local relation rounded and renamed in Spark,
+  checked against a DuckDB oracle;
+- ``hypothesis_suite`` and ``tukey_hsd_priority`` — the operators'
+  full output including p-values (special functions with no SQL
+  equivalent, so rows-only; unit tests pin the p-values against
+  published table values).
 """
 
 from __future__ import annotations
@@ -19,6 +23,8 @@ from ..operators import stats
 from ..plans.materialize import local_frame
 from ..registry import query
 from ..sources.readers import load_table
+
+URGENT, LOW = "1-URGENT", "5-LOW"
 
 
 @query(
@@ -40,29 +46,29 @@ FROM g a JOIN g b ON a.grp = '1-URGENT' AND b.grp = '5-LOW'
 """,
 )
 def welch_t_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pair = _urgent_low_moments(spark, sf_dir)
+    rows = []
+    if pair is not None:
+        (_, m1, _), (_, m2, _) = pair
+        rows.append((URGENT, LOW, m1, m2, *stats.welch(*pair)))
+    out = local_frame(
+        spark,
+        rows,
+        "group1 string, group2 string, m1 double, m2 double, t double, dof double",
+    )
+    return out.select(
+        "group1",
+        "group2",
+        F.round(F.col("m1") - F.col("m2"), 4).alias("mean_diff"),
+        F.round("t", 6).alias("t_stat"),
+        F.round("dof", 2).alias("welch_df"),
+    )
+
+
+def _urgent_low_moments(spark: SparkSession, sf_dir: str) -> tuple | None:
+    """Order-value moments of the 1-URGENT and 5-LOW priorities."""
     orders = load_table(spark, sf_dir, "orders")
-    g = stats.group_stats(
-        orders.filter(F.col("o_orderpriority").isin("1-URGENT", "5-LOW")),
-        "o_totalprice",
-        "o_orderpriority",
-    )
-    a = g.filter(F.col("o_orderpriority") == "1-URGENT").alias("a")
-    b = g.filter(F.col("o_orderpriority") == "5-LOW").alias("b")
-    se2 = F.col("a.var") / F.col("a.n") + F.col("b.var") / F.col("b.n")
-    return a.crossJoin(b).select(
-        F.col("a.o_orderpriority").alias("group1"),
-        F.col("b.o_orderpriority").alias("group2"),
-        F.round(F.col("a.mean") - F.col("b.mean"), 4).alias("mean_diff"),
-        F.round((F.col("a.mean") - F.col("b.mean")) / F.sqrt(se2), 6).alias("t_stat"),
-        F.round(
-            F.pow(se2, 2)
-            / (
-                F.pow(F.col("a.var") / F.col("a.n"), 2) / (F.col("a.n") - 1)
-                + F.pow(F.col("b.var") / F.col("b.n"), 2) / (F.col("b.n") - 1)
-            ),
-            2,
-        ).alias("welch_df"),
-    )
+    return stats.pair_moments(orders, "o_totalprice", "o_orderpriority", URGENT, LOW)
 
 
 @query(
@@ -91,30 +97,28 @@ FROM comp
 )
 def anova_f_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    g = stats.group_stats(orders, "o_totalprice", "o_orderpriority")
-    tot = g.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("n").alias("n_total"),
-        (F.sum(F.col("n") * F.col("mean")) / F.sum("n")).alias("grand"),
+    return _anova_components(
+        spark, stats.group_moments(orders, "o_totalprice", "o_orderpriority"), "f_stat"
     )
-    comp = g.crossJoin(F.broadcast(tot)).groupBy("k", "n_total").agg(
-        F.sum(F.col("n") * F.pow(F.col("mean") - F.col("grand"), 2)).alias("ssb"),
-        F.sum((F.col("n") - 1) * F.col("var")).alias("ssw"),
+
+
+def _anova_components(spark: SparkSession, moments: dict, stat: str) -> DataFrame:
+    """k, n, the sums of squares in millions and the F statistic (named
+    ``stat``) of the one-way ANOVA over ``moments``. Sums of squares
+    reach ~1e14, where the last bits of a sum are engine noise at a
+    0.01 quantum, so they are compared in millions; F is scale-free."""
+    r = stats.anova(moments.values())
+    out = local_frame(
+        spark,
+        [] if r is None else [r],
+        "k long, n long, ssb double, ssw double, df1 long, df2 long, f double",
     )
-    # sums-of-squares are ~1e14 at bench SF: summation-order noise across
-    # engines exceeds a 0.01 rounding quantum on the raw value, so emit
-    # them in millions (noise ~1e-8 of the scaled value) — magnitude-safe
-    # on both sides; f_stat is scale-free and unaffected
-    return comp.select(
+    return out.select(
         "k",
-        F.col("n_total").alias("n"),
+        "n",
         F.round(F.col("ssb") / F.lit(1e6), 2).alias("ss_between_m"),
         F.round(F.col("ssw") / F.lit(1e6), 2).alias("ss_within_m"),
-        F.round(
-            (F.col("ssb") / (F.col("k") - 1))
-            / (F.col("ssw") / (F.col("n_total") - F.col("k"))),
-            6,
-        ).alias("f_stat"),
+        F.round("f", 6).alias(stat),
     )
 
 
@@ -139,35 +143,20 @@ ORDER BY group1, group2
 )
 def tukey_pairwise_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    g = stats.group_stats(orders, "o_totalprice", "o_orderpriority")
-    msw = g.agg(
-        (
-            F.sum((F.col("n") - 1) * F.col("var"))
-            / (F.sum("n") - F.count(F.lit(1)))
-        ).alias("msw")
+    _, _, pairs = stats.tukey_pairs(
+        stats.group_moments(orders, "o_totalprice", "o_orderpriority")
     )
-    a = g.select(
-        F.col("o_orderpriority").alias("group1"),
-        F.col("mean").alias("m1"),
-        F.col("n").alias("n1"),
+    out = local_frame(
+        spark,
+        pairs,
+        "group1 string, group2 string, diff double, se double, q double",
     )
-    b = g.select(
-        F.col("o_orderpriority").alias("group2"),
-        F.col("mean").alias("m2"),
-        F.col("n").alias("n2"),
-    )
-    se = F.sqrt(F.col("msw") / 2 * (1.0 / F.col("n1") + 1.0 / F.col("n2")))
-    return (
-        a.join(b, F.col("group1") < F.col("group2"))
-        .crossJoin(F.broadcast(msw))
-        .select(
-            "group1",
-            "group2",
-            F.round(F.col("m2") - F.col("m1"), 4).alias("diff"),
-            F.round(se, 6).alias("se"),
-            F.round(F.abs(F.col("m2") - F.col("m1")) / se, 6).alias("q_stat"),
-        )
-        .orderBy("group1", "group2")
+    return out.select(
+        "group1",
+        "group2",
+        F.round("diff", 4).alias("diff"),
+        F.round("se", 6).alias("se"),
+        F.round("q", 6).alias("q_stat"),
     )
 
 
@@ -216,31 +205,11 @@ FROM cells
 )
 def chi2_independence_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    obs = li.groupBy(
-        F.col("l_returnflag").alias("a"), F.col("l_linestatus").alias("b")
-    ).agg(F.count(F.lit(1)).cast("double").alias("n"))
-    tot = obs.agg(F.sum("n").alias("tot"))
-    rt = obs.groupBy("a").agg(F.sum("n").alias("rn"))
-    ct = obs.groupBy("b").agg(F.sum("n").alias("cn"))
-    cells = (
-        rt.crossJoin(ct)
-        .crossJoin(F.broadcast(tot))
-        .join(obs, ["a", "b"], "left")
-        .select(
-            "a",
-            "b",
-            (F.col("rn") * F.col("cn") / F.col("tot")).alias("expected"),
-            F.coalesce(F.col("n"), F.lit(0.0)).alias("observed"),
-        )
+    _, chi2, dof, _ = stats.chi2_fold(
+        stats.contingency_cells(li, "l_returnflag", "l_linestatus")
     )
-    return cells.agg(
-        F.round(
-            F.sum(F.pow(F.col("observed") - F.col("expected"), 2) / F.col("expected")), 6
-        ).alias("chi2"),
-        (
-            (F.countDistinct("a") - 1) * (F.countDistinct("b") - 1)
-        ).alias("df"),
-    )
+    out = local_frame(spark, [(chi2, dof)], "chi2 double, df long")
+    return out.select(F.round("chi2", 6).alias("chi2"), "df")
 
 
 # ---------------------------------------------------------------------------
@@ -253,11 +222,11 @@ def chi2_independence_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hypothesis_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    welch = stats.welch_ttest(orders, "o_totalprice", "o_orderpriority", "1-URGENT", "5-LOW")
+    welch = stats.welch_ttest(orders, "o_totalprice", "o_orderpriority", URGENT, LOW)
     anova = stats.oneway_anova(orders, "o_totalprice", "o_orderpriority")
     pearson = stats.pearson_corr_test(li, "l_quantity", "l_extendedprice")
     chi2 = stats.chi2_independence(li, "l_returnflag", "l_linestatus")
-    # bind each result Row ONCE — .first() re-runs the whole Spark job
+    # each operator returns a local relation: .first() runs no job
     rw, ra, rp, rc = welch.first(), anova.first(), pearson.first(), chi2.first()
     rows = [
         ("welch_t_totalprice_urgent_vs_low", rw["t_stat"], rw["p_value"]),
@@ -753,50 +722,17 @@ def flag_status_mutual_information(spark: SparkSession, sf_dir: str) -> DataFram
     the driver, and the one-row result is a local relation rounded by
     Spark. The marginals come from the cells, never from a second pass
     over the fact."""
-    # imported per call: the scale gate in tests/test_plans.py patches
-    # collect_small to see the plans of the frames it collects
-    from ..plans.materialize import collect_small
-
     li = load_table(spark, sf_dir, "lineitem")
-    cells = collect_small(
-        li.groupBy(
-            F.col("l_returnflag").alias("a"), F.col("l_linestatus").alias("b")
-        ).agg(F.count(F.lit(1)).alias("c")),
-        cap=4096,
-    )
     out = local_frame(
         spark,
-        _mutual_information([(r["a"], r["b"], r["c"]) for r in cells]),
+        stats.mutual_information(
+            stats.contingency_cells(li, "l_returnflag", "l_linestatus")
+        ),
         "n long, mi_nats double, h_returnflag double, h_linestatus double",
     )
     return out.select(
         "n", *[F.round(c, 6).alias(c) for c in out.columns[1:]]
     )
-
-
-def _mutual_information(cells: list[tuple]) -> list[tuple]:
-    """``[(n, mi, h_a, h_b)]`` in nats from ``(a, b, count)`` cells, or
-    ``[]`` when no cell has two non-NULL keys. The oracle's SQL shape
-    is kept: NULL keys count in ``n`` and in their marginal entropy but
-    join no marginal in the MI sum, and the MI row is a ``GROUP BY n``
-    over the joined cells, so it has no row when none joined."""
-    ca: dict = {}
-    cb: dict = {}
-    for a, b, c in cells:
-        ca[a] = ca.get(a, 0) + c
-        cb[b] = cb.get(b, 0) + c
-    joined = [(a, b, c) for a, b, c in cells if a is not None and b is not None]
-    if not joined:
-        return []
-    n = sum(ca.values())
-    fn = float(n)
-    mi = math.fsum(
-        (c / fn) * math.log((c / fn) / ((ca[a] / fn) * (cb[b] / fn)))
-        for a, b, c in joined
-    )
-    h_a = -math.fsum((v / fn) * math.log(v / fn) for v in ca.values())
-    h_b = -math.fsum((v / fn) * math.log(v / fn) for v in cb.values())
-    return [(n, mi, h_a, h_b)]
 
 
 @query(
@@ -924,20 +860,17 @@ FROM comp
 )
 def levene_brown_forsythe_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe (median-centered Levene) variance-homogeneity test
-    components: the ANOVA F machinery applied to z = |x - group
-    median| — the assumption check that should precede
-    anova_f_components (reference analogue: the aov preconditions,
-    BigDataProject.R:242-265). Group medians are exact type-7
-    percentiles (== DuckDB quantile_cont), broadcast back to the fact;
-    the z-ANOVA mirrors anova_f_components expression-for-expression,
-    with sums-of-squares emitted in millions for the same
-    magnitude-safety reason.
+    components: the ANOVA F test applied to z = |x - group median| — the
+    assumption check that should precede anova_f_components (reference
+    analogue: the aov preconditions, BigDataProject.R:242-265). Group
+    medians are exact type-7 percentiles (== DuckDB quantile_cont),
+    broadcast back to the fact; the z moments go through the same ANOVA
+    finisher and projection as anova_f_components.
 
     Scale: one grouped exact-percentile pass, one broadcast join (k-row
     median frame), one grouped moment pass — no re-shuffle of the fact
     between passes, no global window."""
     from ..operators.aggregates import percentile_expr
-    from ..operators.stats import group_stats
 
     orders = load_table(spark, sf_dir, "orders")
     x = orders.select(
@@ -947,27 +880,7 @@ def levene_brown_forsythe_components(spark: SparkSession, sf_dir: str) -> DataFr
     z = x.join(F.broadcast(med), "g").select(
         "g", F.abs(F.col("v") - F.col("md")).alias("z")
     )
-    gs = group_stats(z, "z", "g")
-    tot = gs.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("n").alias("n_total"),
-        (F.sum(F.col("n") * F.col("mean")) / F.sum("n")).alias("grand"),
-    )
-    comp = gs.crossJoin(F.broadcast(tot)).groupBy("k", "n_total").agg(
-        F.sum(F.col("n") * F.pow(F.col("mean") - F.col("grand"), 2)).alias("ssb"),
-        F.sum((F.col("n") - 1) * F.col("var")).alias("ssw"),
-    )
-    return comp.select(
-        "k",
-        F.col("n_total").alias("n"),
-        F.round(F.col("ssb") / F.lit(1e6), 2).alias("ss_between_m"),
-        F.round(F.col("ssw") / F.lit(1e6), 2).alias("ss_within_m"),
-        F.round(
-            (F.col("ssb") / (F.col("k") - 1))
-            / (F.col("ssw") / (F.col("n_total") - F.col("k"))),
-            6,
-        ).alias("w_stat"),
-    )
+    return _anova_components(spark, stats.group_moments(z, "z", "g"), "w_stat")
 
 
 @query(
@@ -2078,43 +1991,26 @@ FROM chi
 def priority_status_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér's V — the [0, 1]-normalized effect size of the χ²
     independence test between order priority (5 levels) and order
-    status (3 levels): V = √(χ²/(n·(min(r,c)−1))). The χ² itself folds
-    from the k×m contingency cells exactly as
-    ``chi2_independence_components`` does; V is what makes association
-    strengths comparable ACROSS tables of different shape (the feature-
-    selection readout, where raw χ² is dof-incomparable).
+    status (3 levels): V = √(χ²/(n·(min(r,c)−1))). The χ² and V come
+    from the same fold as ``chi2_independence_components``; V is what
+    makes association strengths comparable ACROSS tables of different
+    shape (the feature-selection readout, where raw χ² is
+    dof-incomparable).
 
-    Scale: one contingency aggregate (k×m cells), marginals by windows
-    over the CELL table (bounded by cardinality product, never rows)."""
+    Scale: one contingency aggregate (k×m cells) collected under a cap;
+    the marginals fold from the cells on the driver."""
     orders = load_table(spark, sf_dir, "orders")
-    ct = orders.groupBy(
-        F.col("o_orderpriority").alias("r"), F.col("o_orderstatus").alias("c")
-    ).agg(F.count(F.lit(1)).cast("double").alias("o"))
-    from pyspark.sql import Window
-
-    m = ct.select(
-        "r",
-        "c",
-        "o",
-        F.sum("o").over(Window.partitionBy("r")).alias("rt"),
-        F.sum("o").over(Window.partitionBy("c")).alias("ct_"),
+    row = stats.chi2_fold(
+        stats.contingency_cells(orders, "o_orderpriority", "o_orderstatus")
     )
-    tot = ct.agg(F.sum("o").alias("n"))
-    m = m.crossJoin(F.broadcast(tot))
-    e = F.col("rt") * F.col("ct_") / F.col("n")
-    chi = m.agg(
-        F.max("n").alias("n"),
-        F.sum((F.col("o") - e) * (F.col("o") - e) / e).alias("chi2"),
-        F.count_distinct("r").alias("nr"),
-        F.count_distinct("c").alias("nc"),
+    out = local_frame(
+        spark, [row], "n_orders long, chi2 double, dof long, v double"
     )
-    return chi.select(
-        F.col("n").cast("long").alias("n_orders"),
+    return out.select(
+        "n_orders",
         F.round("chi2", 6).alias("chi2"),
-        ((F.col("nr") - 1) * (F.col("nc") - 1)).cast("long").alias("dof"),
-        F.round(
-            F.sqrt(F.col("chi2") / (F.col("n") * (F.least("nr", "nc") - 1))), 6
-        ).alias("cramers_v"),
+        "dof",
+        F.round("v", 6).alias("cramers_v"),
     )
 
 
@@ -3080,35 +2976,17 @@ def cohens_d_priority_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     'significant' difference is actually LARGE (p-values scale with n;
     d does not). Same one-pass group moments as ``welch_t_components``.
     """
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
-    )
-    g = orders.groupBy(F.col("o_orderpriority").alias("grp")).agg(
-        F.avg("o_totalprice").alias("m"),
-        F.var_samp("o_totalprice").alias("v"),
-        F.count(F.lit(1)).cast("double").alias("n"),
-    )
-    a = g.filter(F.col("grp") == "1-URGENT").select(
-        F.col("m").alias("ma"), F.col("v").alias("va"), F.col("n").alias("na")
-    )
-    b = g.filter(F.col("grp") == "5-LOW").select(
-        F.col("m").alias("mb"), F.col("v").alias("vb"), F.col("n").alias("nb")
-    )
-    t = a.crossJoin(F.broadcast(b))
-    pooled = F.sqrt(
-        (
-            (F.col("na") - 1) * F.col("va") + (F.col("nb") - 1) * F.col("vb")
-        )
-        / (F.col("na") + F.col("nb") - 2)
-    )
-    d = (F.col("ma") - F.col("mb")) / pooled
-    return t.select(
-        F.col("na").cast("long").alias("n_urgent"),
-        F.col("nb").cast("long").alias("n_low"),
-        F.round(d, 6).alias("cohens_d"),
-        F.round(
-            d * (1 - 3 / (4 * (F.col("na") + F.col("nb")) - 9)), 6
-        ).alias("hedges_g"),
+    pair = _urgent_low_moments(spark, sf_dir)
+    rows = []
+    if pair is not None:
+        (n1, _, _), (n2, _, _) = pair
+        rows.append((n1, n2, *stats.effect_size(*pair)))
+    out = local_frame(spark, rows, "n_urgent long, n_low long, d double, g double")
+    return out.select(
+        "n_urgent",
+        "n_low",
+        F.round("d", 6).alias("cohens_d"),
+        F.round("g", 6).alias("hedges_g"),
     )
 
 

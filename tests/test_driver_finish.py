@@ -1,7 +1,9 @@
 """Small statistics finished on the driver: the capped collect, the
-local-relation frame, the two k-cell finishers, their empty-input
-parity with the DuckDB oracle, their job budget, and a guard that no
-Python list reaches ``createDataFrame`` outside ``local_frame``."""
+local-relation frame, the k-cell and group-moment finishers, their
+empty-input parity with the DuckDB oracle, their job budget, and two
+guards: no Python list reaches ``createDataFrame`` outside
+``local_frame``, and ``operators/stats.py`` reads Spark results only
+through ``collect_small``."""
 
 from __future__ import annotations
 
@@ -18,18 +20,34 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdata_carprice_assignment_spark import registry
+from bigdata_carprice_assignment_spark.operators.stats import (
+    anova,
+    chi2_fold,
+    mutual_information,
+    tukey_pairs,
+)
 from bigdata_carprice_assignment_spark.plans.materialize import (
     collect_small,
     local_frame,
 )
 from bigdata_carprice_assignment_spark.queries.events import _conditional_entropy
-from bigdata_carprice_assignment_spark.queries.statistics import _mutual_information
 from bigdata_carprice_assignment_spark.sources.readers import TESTDATA_TABLES
 
 from .oracle_harness import compare, run_oracle
 
 PACKAGE = Path(__file__).resolve().parents[1] / "bigdata_carprice_assignment_spark"
-DRIVER_FINISHED = ("flag_status_mutual_information", "event_conditional_entropy")
+# name -> (rows on empty input, as the DuckDB oracle gives them; warm job budget)
+DRIVER_FINISHED = {
+    "flag_status_mutual_information": ([], 5),
+    "event_conditional_entropy": ([(None, None, None, None)], 5),
+    "welch_t_components": ([], 3),
+    "cohens_d_priority_extremes": ([], 3),
+    "anova_f_components": ([], 3),
+    "levene_brown_forsythe_components": ([], 5),
+    "tukey_pairwise_components": ([], 3),
+    "chi2_independence_components": ([(None, 1)], 3),
+    "priority_status_cramers_v": ([(None, None, 1, None)], 3),
+}
 
 
 @contextmanager
@@ -94,59 +112,81 @@ def test_finishers_bit_identical_under_cell_order():
     rng = random.Random(7)
     mi_cells = [(a, b, rng.randint(1, 10**6)) for a in "ANR" for b in "FO"]
     mi_cells.append((None, "F", 17))  # NULL key: in n and h_a, not in the MI sum
+    chi_cells = [(a, b, rng.randint(1, 10**6)) for a in "12345" for b in "FOP"]
+    del chi_cells[4]  # an absent cell is observed 0
     markov = [(p, rng.randint(1, 10**5)) for p in "abcdef" for _ in range(6)]
-    mi0, h0 = _mutual_information(mi_cells), _conditional_entropy(markov)
+    moments = [
+        (g, (n, rng.uniform(1e5, 2e5), rng.uniform(1e9, 1e10)))
+        for g, n in zip("abcdefg", rng.sample(range(2, 10**5), 7))
+    ]
+    mi0, h0 = mutual_information(mi_cells), _conditional_entropy(markov)
+    chi0 = chi2_fold(chi_cells)
+    f0, tk0 = anova(m for _, m in moments), tukey_pairs(dict(moments))
     for _ in range(20):
-        rng.shuffle(mi_cells)
-        rng.shuffle(markov)
-        assert _mutual_information(mi_cells) == mi0
+        for xs in (mi_cells, chi_cells, markov, moments):
+            rng.shuffle(xs)
+        assert mutual_information(mi_cells) == mi0
         assert _conditional_entropy(markov) == h0
+        assert chi2_fold(chi_cells) == chi0
+        assert anova(m for _, m in moments) == f0
+        assert tukey_pairs(dict(moments)) == tk0
     n, mi, h_a, h_b = mi0[0]
     assert n == sum(c for _, _, c in mi_cells) and mi >= 0 and h_a > 0 and h_b > 0
     assert h0[0] == sum(c for _, c in markov) and h0[1] >= h0[2] >= 0
+    n, chi2, dof, v = chi0
+    assert n == sum(c for _, _, c in chi_cells) and chi2 > 0 and dof == 8 and 0 < v < 1
+    assert f0[:2] == (7, sum(m[0] for _, m in moments)) and f0[6] > 0
+    assert tk0[:2] == (7, f0[1] - 7) and len(tk0[2]) == 21
 
 
 def test_finishers_empty_shape():
-    assert _mutual_information([]) == []
-    assert _mutual_information([(None, "F", 3)]) == []
+    assert mutual_information([]) == []
+    assert mutual_information([(None, "F", 3)]) == []
     assert _conditional_entropy([]) == (None, None, None)
+    assert chi2_fold([]) == (None, None, 1, None)
+    assert anova([]) is None
+    assert tukey_pairs({}) == (0, 0, [])
+    # a one-row group has no variance; one group has no between-df
+    assert anova([(1, 5.0, None)]) == (1, 1, 0.0, 0.0, 0, 0, None)
+    assert tukey_pairs({"a": (1, 5.0, None), "b": (1, 6.0, None)}) == (
+        2, 0, [("a", "b", 1.0, None, None)]
+    )
 
 
 @pytest.fixture(scope="module")
 def sf_empty(sf_smoke, tmp_path_factory) -> str:
-    """sf0.001 with ``lineitem`` and ``events`` emptied (same parquet
-    schema, zero rows); the other tables link to the originals."""
+    """sf0.001 with ``lineitem``, ``orders`` and ``events`` emptied (same
+    parquet schema, zero rows); the other tables link to the originals."""
     out = tmp_path_factory.mktemp("sf_empty")
     for t in TESTDATA_TABLES:
         src = Path(sf_smoke) / f"{t}.parquet"
-        if t in ("lineitem", "events"):
+        if t in ("lineitem", "orders", "events"):
             pq.write_table(pq.read_table(src).schema.empty_table(), out / src.name)
         else:
             (out / src.name).symlink_to(src)
     return str(out)
 
 
-@pytest.mark.parametrize("name,n_rows", [(DRIVER_FINISHED[0], 0), (DRIVER_FINISHED[1], 1)])
-def test_driver_finished_ops_match_oracle_on_empty_input(spark, sf_empty, name, n_rows):
+@pytest.mark.parametrize("name", DRIVER_FINISHED)
+def test_driver_finished_ops_match_oracle_on_empty_input(spark, sf_empty, name):
     registry.load_all()
     df = registry.QUERIES[name](spark, sf_empty)
-    rows = df.collect()
-    assert len(rows) == n_rows
-    assert all(v is None for r in rows for v in r)
+    assert [tuple(r) for r in df.collect()] == DRIVER_FINISHED[name][0]
     problems = compare(df, run_oracle(registry.ORACLES[name], sf_empty), name)
     assert not problems, "\n".join(problems)
 
 
 @pytest.mark.parametrize("name", DRIVER_FINISHED)
 def test_driver_finished_ops_job_budget(spark, sf_smoke, name):
-    """Second call, collect included: the grouped count's jobs only
-    (the chained pinned-cells + broadcast-crossJoin form ran 19 / 14)."""
+    """Second call, collect included: the grouped read's jobs only (the
+    former broadcast-crossJoin tails ran 5-19 jobs; levene keeps its
+    median and z passes)."""
     registry.load_all()
     fn = registry.QUERIES[name]
     fn(spark, sf_smoke).collect()
     with job_group(spark) as jobs:
         fn(spark, sf_smoke).collect()
-    assert 1 <= len(jobs) <= 5, jobs
+    assert 1 <= len(jobs) <= DRIVER_FINISHED[name][1], jobs
 
 
 def _create_dataframe_calls(src: str) -> list[tuple[str, int]]:
@@ -190,3 +230,36 @@ def test_no_create_dataframe_over_python_lists():
             if (rel, name) not in allowed:
                 offenders.append(f"{rel}:{line} in {name}")
     assert not offenders, "use plans.materialize.local_frame:\n" + "\n".join(offenders)
+
+
+def _driver_reads(src: str) -> list[tuple[str, int]]:
+    """(method, line) of each ``.collect()``, ``.first()``, ``.take()``,
+    ``.head()``, ``.toPandas()`` or ``.toLocalIterator()`` call."""
+    reads = {"collect", "first", "take", "head", "toPandas", "toLocalIterator"}
+    return [
+        (node.func.attr, node.lineno)
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in reads
+    ]
+
+
+def test_stats_operators_read_only_through_collect_small():
+    """``operators/stats.py`` takes Spark results to the driver only
+    through ``materialize.collect_small``: every read is capped, and the
+    scale gate's patch of that attribute sees the collected plans."""
+    assert _driver_reads("df.first()\nx.collect_small(df, 1)\nrows.collect()\n") == [
+        ("first", 1),
+        ("collect", 3),
+    ]
+    src = (PACKAGE / "operators" / "stats.py").read_text()
+    assert _driver_reads(src) == []
+    assert "materialize.collect_small(" in src
+    assert not [
+        a.name
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
+        if a.name == "collect_small"
+    ], "a from-import of collect_small hides the reads from the scale gate"
