@@ -1,7 +1,7 @@
 """Multimodal-column plumbing (driver north star).
 
 Policy: image/audio/video payloads are opaque ``binary`` columns with a
-typed metadata struct; decode / feature-extract / resize / frame-sample
+typed metadata struct; decode / feature-extract / frame-sample
 run as Arrow-batched ``mapInPandas`` operators so payload bytes never
 round-trip through Python row-at-a-time.
 
@@ -74,13 +74,6 @@ def documents_as_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
             F.lit(None).cast("long").alias("duration_ms"),
         ).alias("meta"),
     )
-
-
-def _fake_decode_features(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic pseudo-embedding from payload bytes (sha256-seeded) —
-    stands in for a real decode+CNN feature kernel."""
-    digest = hashlib.sha256(payload).digest()
-    return [int.from_bytes(digest[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)]
 
 
 # ---- pure-stdlib decoders (uncompressed formats only) ---------------------
@@ -312,25 +305,6 @@ def extract_features(df: DataFrame, decode: str = "stdlib", dim: int = 8) -> Dat
             )
 
     return with_len.mapInPandas(op, schema=FEATURE_SCHEMA)
-
-
-def resize_images(df: DataFrame, width: int, height: int, decode: str = "fake") -> DataFrame:
-    """Image resize kernel slot. Fake mode passes payloads through with
-    updated metadata (proves the schema/batch contract); real mode is the
-    Pillow call site."""
-    if decode == "real":  # pragma: no cover
-        raise NotImplementedError("real resize requires Pillow (not in this image)")
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[["media_id", "payload"]].copy()
-            out["width"] = width
-            out["height"] = height
-            yield out
-
-    return df.mapInPandas(
-        op, schema="media_id long, payload binary, width int, height int"
-    )
 
 
 def sample_frames(

@@ -117,13 +117,6 @@ def norm_cdf(z: float) -> float:
     return 0.5 * (1.0 + math.erf(z / math.sqrt(2.0)))
 
 
-def t_sf(t: float, df: float) -> float:
-    """Survival P(T > t) for Student's t."""
-    x = df / (df + t * t)
-    p_two_tail = betainc(df / 2.0, 0.5, x)
-    return p_two_tail / 2.0 if t >= 0 else 1.0 - p_two_tail / 2.0
-
-
 def t_test_p_two_sided(t: float, df: float) -> float:
     return betainc(df / 2.0, 0.5, df / (df + t * t))
 

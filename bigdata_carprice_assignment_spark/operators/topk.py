@@ -37,13 +37,3 @@ def argmax_per_group(
         .drop("_rn")
     )
 
-
-def top_k_per_group(
-    df: DataFrame, group: str, order_col: str, tiebreak: str, k: int
-) -> DataFrame:
-    """Generalized T4 (top-k per group) — the standard OLAP pattern."""
-    w = Window.partitionBy(group).orderBy(F.desc(order_col), F.asc(tiebreak))
-    return (
-        df.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )

@@ -24,16 +24,6 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def simple_plan(df: DataFrame) -> str:
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="simple")
-    return buf.getvalue()
-
-
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     """True if a data-source filter mentioning ``fragment`` was pushed to
     the scan (shows under PushedFilters: in the formatted plan)."""

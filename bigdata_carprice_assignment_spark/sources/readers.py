@@ -7,13 +7,22 @@ format (columnar, predicate pushdown, column pruning); CSV kept for parity
 with the reference, with an explicit StructType for the canonical CarPrice
 schema so production scans never pay inference (inference = an extra full
 pass over 100 TB).
+
+A schemaless parquet read is not free either: Spark runs one job to read
+a footer. The driver's input tables are read through
+:func:`parquet_schema`, which infers each file's schema once per session
+and hands it to the reader, so a repeated :func:`load_table` runs no job.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..plans.materialize import memo
 
 # Driver test corpus (TESTDATA.md): TPC-H-ish star schema + extension tables.
 TESTDATA_TABLES = [
@@ -69,17 +78,53 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema Spark infers for the parquet file at ``path``, read
+    from its footer once per session.
+
+    Inference runs a Spark job, so the schema is kept in ``memo`` under
+    the file's identity: absolute path, size and mtime (a file rewritten
+    in place is inferred again) and the session's current
+    ``spark.sql.legacy.parquet.nanosAsLong``, which decides whether a
+    TIMESTAMP(NANOS) column is inferred as ``bigint``. A path the local
+    file system cannot stat (a missing file, a remote URI) is inferred
+    on every call, so a missing one raises Spark's ``AnalysisException``
+    as a plain read does.
+
+    Only the driver's input tables come through here. ``read_parquet``,
+    ``load_model_table``, ``read_corpus_stats`` and the ``llmdata``
+    ingest reads are left schemaless: they read directories the package
+    writes itself, possibly more than once in a session, and a
+    directory's size and mtime need not change when the files inside it
+    do.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path).schema
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
+    key = ("parquet_schema", os.path.abspath(path), st.st_size, st.st_mtime_ns, nanos)
+    return memo(spark, key, lambda: spark.read.parquet(path).schema)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table, e.g. load_table(spark, sf, 'lineitem').
 
-    ``events.ts`` is Parquet TIMESTAMP(NANOS) — a type Spark lacks. We read
-    it as long (``nanosAsLong``) and truncate to microseconds with integer
-    division (``div``, not ``/`` — nanos since 2024 exceed 2^53, float
-    division would lose precision), matching DuckDB's nanos→micros floor.
+    The parquet footer is read once per session: the schema comes from
+    :func:`parquet_schema`, keyed on the file's path, size and mtime, so
+    a repeated load runs no Spark job and a rewritten file is read anew.
+
+    An ``events.ts`` stored as Parquet TIMESTAMP(NANOS) — a type Spark
+    lacks — is read as long (``nanosAsLong``) and truncated to
+    microseconds with integer division (``div``, not ``/`` — nanos since
+    2024 exceed 2^53, float division would lose precision), matching
+    DuckDB's nanos→micros floor. A TIMESTAMP(MICROS) ts without UTC
+    adjustment reads as is, as ``timestamp_ntz``.
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
@@ -140,6 +185,7 @@ def profile(df: DataFrame) -> DataFrame:
 def load_model_table(spark: SparkSession, path: str) -> DataFrame:
     """S4 model source, table form (readRDS analogue,
     BigDataProject.R:571): loads a parameter table persisted by
-    :func:`..sources.writers.save_model_table`. Schema rides the
-    parquet footer — no inference pass, bit-exact doubles."""
+    :func:`..sources.writers.save_model_table`. The schema is inferred
+    from the parquet footer (one Spark job per call); doubles are
+    bit-exact."""
     return spark.read.parquet(path)

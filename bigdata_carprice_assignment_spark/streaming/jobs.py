@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import session_conf
+from ..sources.readers import parquet_schema
 
 # Shuffle partitions of a replay drain; see ``run_to_completion``.
 STATE_PARTITIONS = 8
@@ -47,22 +48,21 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The corpus's ts physical type has shipped as both TIMESTAMP(NANOS)
     (read as long under ``nanosAsLong``) and TIMESTAMP(MICROS) NTZ, so
-    the stream schema is derived from a zero-row batch probe of the same
-    file rather than hardcoded — a hardcoded long schema silently
-    reinterprets micros as nanos and compresses event time 1000×."""
+    the stream schema takes ts's type from the file's footer, through
+    the batch reader's once-per-session ``parquet_schema``, rather than
+    hardcoding it — a hardcoded long schema silently reinterprets micros
+    as nanos and compresses event time 1000×."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe_type = (
-        spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
-    )
+    ts_type = parquet_schema(spark, f"{sf_dir}/events.parquet")["ts"].dataType
     # the file source requires a directory; pathGlobFilter selects only
     # the events table out of the corpus dir
     stream = (
-        spark.readStream.schema(_events_schema(probe_type))
+        spark.readStream.schema(_events_schema(ts_type))
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    return _normalize_ts(stream, probe_type)
+    return _normalize_ts(stream, ts_type)
 
 
 def _normalize_ts(df: DataFrame, ts_type: T.DataType) -> DataFrame:
