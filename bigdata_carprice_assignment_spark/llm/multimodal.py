@@ -59,11 +59,11 @@ def documents_as_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     """Adapter: treat a text corpus as binary media (UTF-8 payload) so the
     multimodal path has real bytes to run on in this container.
 
-    Repartitions by id first: media kernels are per-row CPU work and the
-    corpus may arrive as one file split — spread before the Python stage.
+    No repartition: the Python stage runs one task per input split, and
+    ``spark.sql.files.maxPartitionBytes`` sizes the splits by bytes. A
+    Python task has a fixed cost that does not depend on its rows, so
+    spreading a small corpus over more tasks only adds that cost.
     """
-    n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    df = df.repartition(n_parts, id_col)
     return df.select(
         F.col(id_col).alias("media_id"),
         F.encode(F.col(text_col), "UTF-8").alias("payload"),

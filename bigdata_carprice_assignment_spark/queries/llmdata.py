@@ -580,6 +580,10 @@ def _doc_norm_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
+        # At least 8 partitions: with defaultParallelism alone (sf0.1, 4
+        # cores, warm median of 3) semantic_dedup_prune_stats went 0.96 ->
+        # 1.54 s and rrf_fused_retrieval_top10 1.71 -> 2.22 s, though
+        # vocab_zipf_top20 went 0.76 -> 0.51 s.
         n_parts = max(spark.sparkContext.defaultParallelism, 8)
         return docs.repartition(n_parts, "doc_id").select(
             "doc_id",
@@ -2063,6 +2067,9 @@ def char_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify step shingles candidate docs only — candidates ≪ corpus by
     LSH construction."""
     docs = load_table(spark, sf_dir, "documents")
+    # At least 8 partitions: with defaultParallelism alone (sf0.1, 4
+    # cores, warm median of 3, its minhash and verify steps unfloored
+    # too) this query went 2.13 -> 2.33 s.
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
     chsh = memo(
         spark,

@@ -74,6 +74,14 @@ def get_spark(app_name: str = "bigdata_carprice_assignment_spark") -> SparkSessi
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # Python workers unpickle UDFs that import this package, so they
+        # need its parent directory on their path whatever the driver's
+        # cwd. A directory, not a zip: each zip on a worker's path adds to
+        # the per-task import-cache reset.
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -25,7 +25,10 @@ from pyspark.sql import types as T
 from ..session import session_conf
 from ..sources.readers import parquet_schema
 
-# Shuffle partitions of a replay drain; see ``run_to_completion``.
+# Most shuffle partitions of a replay drain; ``run_to_completion`` caps
+# it at the core count. Not 1: the drains with per-key Python or session
+# work then run on one core (at sf0.1, 1 partition took
+# streaming_stateful_totals_replay from 4.3 to 8.2 s on 4 cores).
 STATE_PARTITIONS = 8
 
 
@@ -309,14 +312,18 @@ def run_to_completion(
     return the materialized result (memory sink + processAllAvailable —
     the documented local smoke pattern).
 
-    The drain runs with ``STATE_PARTITIONS`` shuffle partitions
-    (``session_conf``): a streaming query keeps one state store per
-    shuffle partition per stateful operator (a stream-stream join keeps
-    four per partition), and each micro-batch commits a delta file per
-    store, so at a 32-partition session width the attribution replay
-    pays 128 store commits per batch of pure fixture overhead. Results
-    do not depend on the partition count. On a real cluster the same
-    plans run with shuffle partitions sized to the stream volume.
+    The drain runs with ``min(STATE_PARTITIONS, defaultParallelism)``
+    shuffle partitions (``session_conf``): a streaming query keeps one
+    state store per shuffle partition per stateful operator (a
+    stream-stream join keeps four per partition), each micro-batch
+    commits a delta file per store, and each partition of an
+    ``applyInPandasWithState`` drain is one Python task. So at a
+    32-partition session width the attribution replay pays 128 store
+    commits per batch of pure fixture overhead, and more partitions
+    than cores only queue. Fewer than the cores would leave cores idle
+    in the drains with real per-key work. Results do not depend on the
+    partition count. On a real cluster the same plans run with shuffle
+    partitions sized to the stream volume.
 
     The checkpoint (offset WAL, commit log, state-store deltas) is
     ephemeral replay state, so it goes to a RAM-backed dir when one
@@ -343,9 +350,8 @@ def run_to_completion(
         ckpt = f"{ckpt_base}/{os.getpid()}-{name}-{uuid.uuid4().hex}"
         writer = writer.option("checkpointLocation", ckpt)
     try:
-        with session_conf(
-            spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
-        ):
+        width = min(STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+        with session_conf(spark, {"spark.sql.shuffle.partitions": str(width)}):
             q = writer.start()
             try:
                 q.processAllAvailable()
